@@ -15,6 +15,34 @@ import graft.sources.ImageCodecIO
   */
 object ImageOps {
 
+  /** The `binaryFile` rows (path, modificationTime, length, content) of
+    * the files `pathGlob` names. Spark expands a glob into one root path
+    * per matching file, and above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) root
+    * paths it lists them with a distributed job while the DataFrame is
+    * still being built. When only the last path component has
+    * wildcards, the directory is read instead with that component as
+    * `pathGlobFilter`: one root path, listed on the driver, no job.
+    * `recursiveFileLookup` keeps subdirectory names from being inferred
+    * as partition columns, and the filter on the parent keeps only the
+    * directory's direct children, as the glob would. Any other path
+    * loads as given. */
+  private[graft] def binaryFiles(spark: SparkSession, pathGlob: String): DataFrame = {
+    def hasGlob(s: String) = s.exists("*?[{\\".contains(_))
+    val cut = pathGlob.lastIndexOf('/')
+    val (dir, name) = (pathGlob.substring(0, math.max(cut, 0)), pathGlob.substring(cut + 1))
+    if (cut <= 0 || hasGlob(dir) || !hasGlob(name)) spark.read.format("binaryFile").load(pathGlob)
+    else {
+      val dirPath = new org.apache.hadoop.fs.Path(dir)
+      val qualified = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(dirPath).toString
+      spark.read.format("binaryFile")
+        .option("pathGlobFilter", name).option("recursiveFileLookup", "true")
+        .load(dir)
+        .filter(regexp_replace(col("path"), "/[^/]*$", "") === lit(qualified))
+    }
+  }
+
   /** Distributed image load: binaryFile source + in-task decode
     * (rebuild of `loadImages`/`ijFile`, scOps.scala:75-97, 309-316).
     * The decode UDF runs inside the scan projection, so metadata-only
@@ -22,7 +50,7 @@ object ImageOps {
     * parquet catalogs when pixels aren't needed. */
   def loadImages(spark: SparkSession, pathGlob: String): DataFrame = {
     val decode = udf((path: String, content: Array[Byte]) => ImageCodecIO.decode(path, content))
-    spark.read.format("binaryFile").load(pathGlob)
+    binaryFiles(spark, pathGlob)
       .select(col("path").as("sample"),
               decode(col("path"), col("content")).as("image"))
   }
@@ -154,7 +182,7 @@ object ImageOps {
     val decode = udf { (path: String, content: Array[Byte]) =>
       ImageCodecIO.decodeDicomWithInstance(path, content)
     }
-    spark.read.format("binaryFile").load(pathGlob)
+    binaryFiles(spark, pathGlob)
       .select(col("path"), decode(col("path"), col("content")).as("d"))
       .select(
         regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1), "_\\d+\\.dcm$", "")
@@ -275,7 +303,7 @@ object ImageOps {
     val decode = udf { (path: String, content: Array[Byte]) =>
       ImageCodecIO.decodeDicomWithInstance(path, content)._1
     }
-    spark.read.format("binaryFile").load(pathGlob)
+    binaryFiles(spark, pathGlob)
       .select(
         regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1), "\\.dcm$", "")
           .as("name"),
@@ -298,7 +326,7 @@ object ImageOps {
     val decode = udf { (path: String, content: Array[Byte]) =>
       ImageCodecIO.decodeDicomWithInstance(path, content)
     }
-    spark.read.format("binaryFile").load(pathGlob)
+    binaryFiles(spark, pathGlob)
       .select(col("path"),
         syntax(col("path"), col("content")).as("ts"),
         decode(col("path"), col("content")).as("d"))

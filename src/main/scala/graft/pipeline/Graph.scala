@@ -106,9 +106,11 @@ object Graph {
       val contrib = new java.util.HashMap[Long, Long](nodes.length * 2)
       ew.foreach { case (src, dst, w) =>
         val r = rank.get(src) // every src is a node by construction
-        val c = (r * w) / ow.get(src)
-        if (nodeSet.contains(dst))
-          contrib.merge(dst, c, (a, b) => a + b)
+        val o = ow.get(src)
+        // a source whose out-weights sum to 0 contributes nothing: the
+        // distributed step's `div nullif(ow, 0)` is null and SUM skips it
+        if (o != 0L && nodeSet.contains(dst))
+          contrib.merge(dst, (r * w) / o, (a, b) => a + b)
       }
       val next = new java.util.HashMap[Long, Long](nodes.length * 2)
       nodes.foreach { v =>
@@ -487,24 +489,24 @@ object Graph {
     * on the edge relation itself: ONE join + ONE agg per round, the
     * [[pagerankStep]] fast shape, with the per-round seeded left join
     * gone. The flag is constant per dst, so max() over the group
-    * recovers it exactly; sc is never null here (every node has an
-    * in-edge), so `(17 * sc) div 20` equals the slow path's
-    * coalesce'd term row for row. */
+    * recovers it exactly. sc is null only when every in-edge comes
+    * from a source whose out-weights sum to 0; it counts as 0 there,
+    * as in the slow path. */
   private[graft] def pprFastStep(ewS: DataFrame, rank: DataFrame,
                                  base: Long): DataFrame =
     ewS.join(rank.select(col("v").as("src"), col("rank")), Seq("src"))
-      .select(col("dst").as("v"), col("sd"), expr("(rank * w) div ow").as("c"))
+      .select(col("dst").as("v"), col("sd"), expr("(rank * w) div nullif(ow, 0)").as("c"))
       .groupBy(col("v"))
       .agg(max(col("sd")).as("s"), sum(col("c")).as("sc"))
       .select(col("v"),
         (when(col("s"), lit(base)).otherwise(lit(0L))
-          + expr("(17 * sc) div 20")).as("rank"))
+          + expr("(17 * coalesce(sc, 0L)) div 20")).as("rank"))
 
   private[graft] def pprStep(ew: DataFrame, seeded: DataFrame,
                              rank: DataFrame, base: Long): DataFrame = {
     val contrib = ew
       .join(rank.select(col("v").as("src"), col("rank")), Seq("src"))
-      .select(col("dst").as("v"), expr("(rank * w) div ow").as("c"))
+      .select(col("dst").as("v"), expr("(rank * w) div nullif(ow, 0)").as("c"))
       .groupBy(col("v")).agg(sum(col("c")).as("sc"))
     seeded.join(contrib, Seq("v"), "left")
       .select(col("v"),
@@ -522,7 +524,7 @@ object Graph {
                                   nodes: Option[DataFrame]): DataFrame = {
     val contrib = ew
       .join(rank.select(col("v").as("src"), col("rank")), Seq("src"))
-      .select(col("dst").as("v"), expr("(rank * w) div ow").as("c"))
+      .select(col("dst").as("v"), expr("(rank * w) div nullif(ow, 0)").as("c"))
       .groupBy(col("v")).agg(sum(col("c")).as("sc"))
     nodes match {
       case Some(ns) =>
@@ -531,7 +533,7 @@ object Graph {
             (lit(base) + expr("(17 * coalesce(sc, 0L)) div 20")).as("rank"))
       case None =>
         contrib.select(col("v"),
-          (lit(base) + expr("(17 * sc) div 20")).as("rank"))
+          (lit(base) + expr("(17 * coalesce(sc, 0L)) div 20")).as("rank"))
     }
   }
 

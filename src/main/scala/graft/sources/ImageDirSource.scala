@@ -25,8 +25,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Schema: path, name, size, image. Column pruning means a catalog
   * query (`SELECT path, size`) reads directory entries only — no file
   * bytes, no decode; the reference's source decoded everything always.
-  * Files are split across `partitions` input partitions by stable path
-  * order, so task placement is deterministic.
+  * Files are dealt round-robin over `partitions` input partitions in
+  * sorted path order (file i to partition i mod n), so placement is
+  * deterministic. Contiguous slices would put files that sort together
+  * (one series, or one codec's files named alike) into one task, and
+  * that task would set the scan's wall time whenever their decode
+  * costs more than the rest.
   */
 class ImageDirSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "imagedir"
@@ -157,14 +161,12 @@ class ImageDirScan(options: Map[String, String], required: StructType)
   override def planInputPartitions(): Array[InputPartition] = {
     val files = ImageDirSource.listFiles(
       options.getOrElse("path", "."),
-      options.getOrElse("pattern", ".*\\.(png|gif|bmp)"))
+      options.getOrElse("pattern", ".*\\.(png|gif|bmp)")).toArray
     val parts = math.max(1, math.min(options.getOrElse("partitions", "8").toInt,
       math.max(1, files.length)))
-    (0 until parts).map { p =>
-      val lo = files.length * p / parts
-      val hi = files.length * (p + 1) / parts
-      ImageDirPartition(files.slice(lo, hi).toArray): InputPartition
-    }.toArray
+    Array.tabulate[InputPartition](parts) { p =>
+      ImageDirPartition((p until files.length by parts).map(files).toArray)
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -80,35 +80,46 @@ object Jpeg2000Codec {
   private val CtxRl = 17
   private val CtxUni = 18
 
-  private def initStates(idx: Array[Int], mps: Array[Int]): Unit = {
-    java.util.Arrays.fill(idx, 0); java.util.Arrays.fill(mps, 0)
-    idx(0) = 4; idx(CtxRl) = 3; idx(CtxUni) = 46 // Table D.7
+  // Each context's state is one Int, (Qe-table index << 1) | MPS; the
+  // three transition tables below map a state to its Qe and to its
+  // successor after an MPS or an LPS (with the MPS switch folded in).
+  private val QeOf = Array.tabulate(2 * QeTab.length)(s => QeTab(s >> 1))
+  private val AfterMps = Array.tabulate(2 * QeTab.length)(s => (NmpsTab(s >> 1) << 1) | (s & 1))
+  private val AfterLps = Array.tabulate(2 * QeTab.length)(s =>
+    (NlpsTab(s >> 1) << 1) | ((s & 1) ^ SwitchTab(s >> 1)))
+
+  private def initialStates(): Array[Int] = {
+    val st = new Array[Int](NCtx)
+    st(0) = 4 << 1; st(CtxRl) = 3 << 1; st(CtxUni) = 46 << 1 // Table D.7
+    st
   }
 
   private final class MqEncoder {
-    private val buf = ArrayBuffer[Byte](0) // buf(0): carry catcher before the stream
+    private var buf = new Array[Byte](256) // buf(0): carry catcher before the stream
     private var bp = 0
     private var a = 0x8000
     private var c = 0
     private var ct = 12
-    val idx = new Array[Int](NCtx); val mps = new Array[Int](NCtx)
-    initStates(idx, mps)
+    private val st = initialStates()
+
+    private def put(v: Int): Unit = {
+      bp += 1
+      if (bp == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * buf.length)
+      buf(bp) = v.toByte
+    }
 
     private def byteOut(): Unit = {
       if ((buf(bp) & 0xff) == 0xff) {
-        bp += 1; if (bp == buf.length) buf += 0
-        buf(bp) = ((c >> 20) & 0xff).toByte; c &= 0xfffff; ct = 7
+        put(c >> 20); c &= 0xfffff; ct = 7
       } else {
         if (c >= 0x8000000) { // carry into the previous byte
           buf(bp) = (buf(bp) + 1).toByte; c &= 0x7ffffff
           if ((buf(bp) & 0xff) == 0xff) {
-            bp += 1; if (bp == buf.length) buf += 0
-            buf(bp) = ((c >> 20) & 0xff).toByte; c &= 0xfffff; ct = 7
+            put(c >> 20); c &= 0xfffff; ct = 7
             return
           }
         }
-        bp += 1; if (bp == buf.length) buf += 0
-        buf(bp) = ((c >> 19) & 0xff).toByte; c &= 0x7ffff; ct = 8
+        put(c >> 19); c &= 0x7ffff; ct = 8
       }
     }
 
@@ -120,19 +131,18 @@ object Jpeg2000Codec {
     }
 
     def encode(cx: Int, d: Int): Unit = {
-      val qe = QeTab(idx(cx))
-      if (d == mps(cx)) {
-        a -= qe
+      val s = st(cx)
+      val qe = QeOf(s)
+      a -= qe
+      if (d == (s & 1)) {
         if (a >= 0x8000) c += qe
         else {
           if (a < qe) a = qe else c += qe
-          idx(cx) = NmpsTab(idx(cx)); renorm()
+          st(cx) = AfterMps(s); renorm()
         }
       } else {
-        a -= qe
         if (a < qe) c += qe else a = qe
-        if (SwitchTab(idx(cx)) == 1) mps(cx) = 1 - mps(cx)
-        idx(cx) = NlpsTab(idx(cx)); renorm()
+        st(cx) = AfterLps(s); renorm()
       }
     }
 
@@ -146,57 +156,54 @@ object Jpeg2000Codec {
       if ((buf(bp) & 0xff) != 0xff) bp += 1
       require((buf(0) & 0xff) == 0,
         "MQ flush carried past the stream start") // unreachable by C + A invariant
-      buf.slice(1, math.max(1, bp)).toArray
+      java.util.Arrays.copyOfRange(buf, 1, math.max(1, bp))
     }
   }
 
-  private final class MqDecoder(data: Array[Byte]) {
+  /** Decodes the `len` bytes of `src` at `off`. Past the segment the
+    * decoder reads 0xFF (C.3.4); two padding bytes hold that value, so
+    * the byte reader needs no bounds test. */
+  private final class MqDecoder(src: Array[Byte], off: Int, len: Int) {
+    private val data = java.util.Arrays.copyOfRange(src, off, off + len + 2)
+    data(len) = 0xff.toByte; data(len + 1) = 0xff.toByte
     private var bp = 0
     private var c = 0
     private var a = 0
     private var ct = 0
-    val idx = new Array[Int](NCtx); val mps = new Array[Int](NCtx)
-    initStates(idx, mps)
+    private val st = initialStates()
     // INITDEC (C.3.5)
-    c = (byteAt(0) & 0xff) << 16
+    c = (data(0) & 0xff) << 16
     byteIn()
     c <<= 7; ct -= 7; a = 0x8000
 
-    private def byteAt(i: Int): Int = if (i < data.length) data(i) & 0xff else 0xff
-
     private def byteIn(): Unit = {
-      if (byteAt(bp) == 0xff) {
-        if (byteAt(bp + 1) > 0x8f) { c += 0xff00; ct = 8 }
-        else { bp += 1; c += byteAt(bp) << 9; ct = 7 }
-      } else { bp += 1; c += byteAt(bp) << 8; ct = 8 }
+      if ((data(bp) & 0xff) == 0xff) {
+        if ((data(bp + 1) & 0xff) > 0x8f) { c += 0xff00; ct = 8 }
+        else { bp += 1; c += (data(bp) & 0xff) << 9; ct = 7 }
+      } else { bp += 1; c += (data(bp) & 0xff) << 8; ct = 8 }
     }
 
     def decode(cx: Int): Int = {
-      val qe = QeTab(idx(cx))
+      val s = st(cx)
+      val qe = QeOf(s)
       a -= qe
-      var d = 0
       if (((c >>> 16) & 0xffff) < qe) {
         // LPS exchange path
-        if (a < qe) { d = mps(cx); idx(cx) = NmpsTab(idx(cx)) }
-        else {
-          d = 1 - mps(cx)
-          if (SwitchTab(idx(cx)) == 1) mps(cx) = 1 - mps(cx)
-          idx(cx) = NlpsTab(idx(cx))
-        }
+        val d = if (a < qe) { st(cx) = AfterMps(s); s & 1 }
+                else { st(cx) = AfterLps(s); 1 - (s & 1) }
         a = qe
         renorm()
+        d
       } else {
         c -= qe << 16
-        if ((a & 0x8000) == 0) {
-          if (a < qe) {
-            d = 1 - mps(cx)
-            if (SwitchTab(idx(cx)) == 1) mps(cx) = 1 - mps(cx)
-            idx(cx) = NlpsTab(idx(cx))
-          } else { d = mps(cx); idx(cx) = NmpsTab(idx(cx)) }
+        if ((a & 0x8000) != 0) s & 1
+        else {
+          val d = if (a < qe) { st(cx) = AfterLps(s); 1 - (s & 1) }
+                  else { st(cx) = AfterMps(s); s & 1 }
           renorm()
-        } else d = mps(cx)
+          d
+        }
       }
-      d
     }
 
     private def renorm(): Unit = {
@@ -357,11 +364,11 @@ object Jpeg2000Codec {
   // Reversible 5/3 DWT (Annex F lifting, symmetric extension),
   // even-origin signals (tile and all subbands start at 0).
   // ----------------------------------------------------------------
-  private def fwd53(x: Array[Int], n: Int, stride: Int, base: Int, tmp: Array[Int]): Unit = {
+  private def fwd53(x: Array[Int], n: Int, stride: Int, base: Int,
+                    tmp: Array[Int], y: Array[Int]): Unit = {
     if (n <= 1) return
     var i = 0
     while (i < n) { tmp(i) = x(base + i * stride); i += 1 }
-    val y = new Array[Int](n)
     i = 1
     while (i < n) { // high (odd) samples first
       val r = if (i + 1 < n) tmp(i + 1) else tmp(i - 1)
@@ -381,10 +388,10 @@ object Jpeg2000Codec {
     while (i < n) { val d = if (i % 2 == 0) i / 2 else nl + i / 2; x(base + d * stride) = y(i); i += 1 }
   }
 
-  private def inv53(x: Array[Int], n: Int, stride: Int, base: Int, tmp: Array[Int]): Unit = {
+  private def inv53(x: Array[Int], n: Int, stride: Int, base: Int,
+                    tmp: Array[Int], y: Array[Int]): Unit = {
     if (n <= 1) return
     val nl = (n + 1) / 2
-    val y = new Array[Int](n)
     var i = 0
     while (i < n) { val s = if (i % 2 == 0) i / 2 else nl + i / 2; y(i) = x(base + s * stride); i += 1 }
     i = 0
@@ -410,28 +417,28 @@ object Jpeg2000Codec {
     * recursively) occupies the array. Rows are lifted before columns
     * each level; the inverse mirrors that. */
   private def fdwt(img: Array[Int], w: Int, h: Int, levels: Int): Unit = {
-    val tmp = new Array[Int](math.max(w, h))
+    val tmp = new Array[Int](math.max(w, h)); val buf = new Array[Int](tmp.length)
     var lw = w; var lh = h
     var l = 0
     while (l < levels) {
       var y = 0
-      while (y < lh) { fwd53(img, lw, 1, y * w, tmp); y += 1 }
+      while (y < lh) { fwd53(img, lw, 1, y * w, tmp, buf); y += 1 }
       var x = 0
-      while (x < lw) { fwd53(img, lh, w, x, tmp); x += 1 }
+      while (x < lw) { fwd53(img, lh, w, x, tmp, buf); x += 1 }
       lw = (lw + 1) / 2; lh = (lh + 1) / 2
       l += 1
     }
   }
 
   private def idwt(img: Array[Int], w: Int, h: Int, levels: Int): Unit = {
-    val tmp = new Array[Int](math.max(w, h))
+    val tmp = new Array[Int](math.max(w, h)); val buf = new Array[Int](tmp.length)
     var l = levels - 1
     while (l >= 0) {
       val lw = sizeAt(w, l); val lh = sizeAt(h, l)
       var x = 0
-      while (x < lw) { inv53(img, lh, w, x, tmp); x += 1 }
+      while (x < lw) { inv53(img, lh, w, x, tmp, buf); x += 1 }
       var y = 0
-      while (y < lh) { inv53(img, lw, 1, y * w, tmp); y += 1 }
+      while (y < lh) { inv53(img, lw, 1, y * w, tmp, buf); y += 1 }
       l -= 1
     }
   }
@@ -567,186 +574,195 @@ object Jpeg2000Codec {
     case _        => throw new IllegalStateException("unclamped sign contribution")
   }
 
-  /** One code block's coefficient state during Tier-1 coding. */
-  private final class T1Block(val w: Int, val h: Int, val orient: Int) {
-    val mag = new Array[Int](w * h)
-    val sgn = new Array[Int](w * h) // 0 positive, 1 negative
-    val sig = new Array[Boolean](w * h)
-    val visited = new Array[Boolean](w * h)
-    val refined = new Array[Boolean](w * h)
+  // Per-coefficient flag word. Bits 0-7: significance of the W, E, N,
+  // S, NW, NE, SW, SE neighbours; bits 8-11: sign (1 = negative) of
+  // the significant W, E, N, S neighbours; then the coefficient's own
+  // state. A coefficient turning significant writes its bits into its
+  // eight neighbours, so a context is one table lookup.
+  private final val NbW = 1
+  private final val NbE = 2
+  private final val NbN = 4
+  private final val NbS = 8
+  private final val NbNW = 16
+  private final val NbNE = 32
+  private final val NbSW = 64
+  private final val NbSE = 128
+  private final val NbSig = 0xff
+  private final val SgnW = 8 // shift of the W neighbour's sign bit; E, N, S follow
+  private final val Sig = 1 << 12
+  private final val Visit = 1 << 13 // coded in this plane's significance pass
+  private final val Refined = 1 << 14
+  private final val Neg = 1 << 15
 
-    @inline def at(x: Int, y: Int): Int = y * w + x
-    @inline private def s(x: Int, y: Int): Boolean =
-      x >= 0 && x < w && y >= 0 && y < h && sig(at(x, y))
+  /** Zero-coding context by (orientation << 8) | neighbour bits. */
+  private val ZcLut = Array.tabulate(4 * 256) { k =>
+    val n = k & 0xff
+    def has(b: Int) = if ((n & b) != 0) 1 else 0
+    zcContext(k >> 8, has(NbW) + has(NbE), has(NbN) + has(NbS),
+      has(NbNW) + has(NbNE) + has(NbSW) + has(NbSE))
+  }
 
-    def counts(x: Int, y: Int): (Int, Int, Int) = {
-      val hh = (if (s(x - 1, y)) 1 else 0) + (if (s(x + 1, y)) 1 else 0)
-      val vv = (if (s(x, y - 1)) 1 else 0) + (if (s(x, y + 1)) 1 else 0)
-      val dd = (if (s(x - 1, y - 1)) 1 else 0) + (if (s(x + 1, y - 1)) 1 else 0) +
-        (if (s(x - 1, y + 1)) 1 else 0) + (if (s(x + 1, y + 1)) 1 else 0)
-      (hh, vv, dd)
+  /** (Sign context << 1) | XOR bit by (W, E, N, S signs << 4) | their
+    * significance. */
+  private val SignLut = Array.tabulate(256) { k =>
+    def contrib(j: Int) = if ((k & (1 << j)) == 0) 0 else if ((k & (16 << j)) == 0) 1 else -1
+    def clamp(v: Int) = math.max(-1, math.min(1, v))
+    val (cx, xor) = scContext(clamp(contrib(0) + contrib(1)), clamp(contrib(2) + contrib(3)))
+    (cx << 1) | xor
+  }
+
+  /** One code block during Tier-1 coding, in exactly one direction:
+    * `enc` codes the block's coefficients, or `dec` rebuilds them.
+    * Coefficients sit row-major with a one-coefficient border, so
+    * neighbour updates never test the block's edges. */
+  private final class T1(w: Int, h: Int, orient: Int,
+                         enc: MqEncoder, dec: MqDecoder) {
+    private val stride = w + 2
+    val mag = new Array[Int](stride * (h + 2))
+    val flags = new Array[Int](stride * (h + 2)) // Neg is preset when encoding
+    private val decoding = dec ne null
+    private val zcBase = orient << 8
+
+    @inline def at(x: Int, y: Int): Int = (y + 1) * stride + x + 1
+
+    /** Code bit `b` in context `cx` (encoder), or return the decoded
+      * bit (decoder, which ignores `b`). */
+    @inline private def bit(cx: Int, b: Int): Int =
+      if (decoding) dec.decode(cx) else { enc.encode(cx, b); b }
+
+    /** Code the sign of coefficient `i` and mark it significant at
+      * plane p. */
+    private def codeSign(i: Int, p: Int): Unit = {
+      val f = flags(i)
+      val sc = SignLut((f & 0xf) | ((f >>> 4) & 0xf0))
+      val neg = bit(sc >>> 1, ((f >>> 15) & 1) ^ (sc & 1)) ^ (sc & 1)
+      if (decoding) mag(i) |= 1 << p
+      flags(i) = f | Sig | (neg << 15)
+      val s = stride
+      flags(i - s - 1) |= NbSE
+      flags(i - s) |= NbS | (neg << (SgnW + 3))
+      flags(i - s + 1) |= NbSW
+      flags(i - 1) |= NbE | (neg << (SgnW + 1))
+      flags(i + 1) |= NbW | (neg << SgnW)
+      flags(i + s - 1) |= NbNE
+      flags(i + s) |= NbN | (neg << (SgnW + 2))
+      flags(i + s + 1) |= NbNW
     }
-    def anyNeighbourSig(x: Int, y: Int): Boolean = {
-      val (a, b, c) = counts(x, y); a + b + c > 0
+
+    /** OR of the flags of the stripe column of `rows` coefficients
+      * from `i`: a pass skips a column this shows has nothing to code. */
+    @inline private def column(i: Int, rows: Int): Int = {
+      val s = stride
+      if (rows == 4) flags(i) | flags(i + s) | flags(i + 2 * s) | flags(i + 3 * s)
+      else {
+        var f = 0; var k = 0
+        while (k < rows) { f |= flags(i + k * s); k += 1 }
+        f
+      }
     }
-    private def contrib(x: Int, y: Int): Int =
-      if (!s(x, y)) 0 else if (sgn(at(x, y)) == 0) 1 else -1
-    def signCtx(x: Int, y: Int): (Int, Int) = {
-      val hc = math.max(-1, math.min(1, contrib(x - 1, y) + contrib(x + 1, y)))
-      val vc = math.max(-1, math.min(1, contrib(x, y - 1) + contrib(x, y + 1)))
-      scContext(hc, vc)
-    }
-  }
 
-  /** Direction-agnostic MQ face: the encoder codes the bit the
-    * by-name argument computes; the decoder ignores it and returns
-    * the decoded bit. */
-  private sealed trait MqIo { def bit(cx: Int, encBit: => Int): Int; def decoding: Boolean }
-  private final class EncIo(enc: MqEncoder) extends MqIo {
-    def bit(cx: Int, encBit: => Int): Int = { val b = encBit; enc.encode(cx, b); b }
-    def decoding = false
-  }
-  private final class DecIo(dec: MqDecoder) extends MqIo {
-    def bit(cx: Int, encBit: => Int): Int = dec.decode(cx)
-    def decoding = true
-  }
-
-  /** Code the sign of (x,y) and mark it significant at plane p. */
-  private def codeSign(t: T1Block, io: MqIo, x: Int, y: Int, p: Int): Unit = {
-    val i = t.at(x, y)
-    if (io.decoding) t.mag(i) |= 1 << p
-    val (cx, xor) = t.signCtx(x, y)
-    val b = io.bit(cx, t.sgn(i) ^ xor)
-    if (io.decoding) t.sgn(i) = b ^ xor
-    t.sig(i) = true
-  }
-
-  /** Significance-propagation pass (D.3.1). */
-  private def pass1(t: T1Block, io: MqIo, p: Int): Unit = {
-    var y0 = 0
-    while (y0 < t.h) {
-      var x = 0
-      while (x < t.w) {
-        var y = y0
-        while (y < math.min(y0 + 4, t.h)) {
-          val i = t.at(x, y)
-          if (!t.sig(i)) {
-            val (hh, vv, dd) = t.counts(x, y)
-            if (hh + vv + dd > 0) {
-              val cx = zcContext(t.orient, hh, vv, dd)
-              val b = io.bit(cx, (t.mag(i) >>> p) & 1)
-              t.visited(i) = true
-              if (b == 1) codeSign(t, io, x, y, p)
+    /** Significance-propagation pass (D.3.1). */
+    private def pass1(p: Int): Unit = {
+      var y0 = 0
+      while (y0 < h) {
+        val rows = math.min(4, h - y0)
+        var x = 0
+        while (x < w) {
+          var i = at(x, y0)
+          var k = if ((column(i, rows) & NbSig) == 0) rows else 0
+          while (k < rows) {
+            val f = flags(i)
+            if ((f & Sig) == 0 && (f & NbSig) != 0) {
+              val b = bit(ZcLut(zcBase | (f & NbSig)), (mag(i) >>> p) & 1)
+              flags(i) = f | Visit
+              if (b == 1) codeSign(i, p)
             }
+            i += stride; k += 1
           }
-          y += 1
+          x += 1
         }
-        x += 1
+        y0 += 4
       }
-      y0 += 4
     }
-  }
 
-  /** Magnitude-refinement pass (D.3.3). */
-  private def pass2(t: T1Block, io: MqIo, p: Int): Unit = {
-    var y0 = 0
-    while (y0 < t.h) {
-      var x = 0
-      while (x < t.w) {
-        var y = y0
-        while (y < math.min(y0 + 4, t.h)) {
-          val i = t.at(x, y)
-          if (t.sig(i) && !t.visited(i)) {
-            val cx = if (!t.refined(i)) { if (t.anyNeighbourSig(x, y)) 15 else 14 } else 16
-            val b = io.bit(cx, (t.mag(i) >>> p) & 1)
-            if (io.decoding) t.mag(i) |= b << p
-            t.refined(i) = true
+    /** Magnitude-refinement pass (D.3.3). */
+    private def pass2(p: Int): Unit = {
+      var y0 = 0
+      while (y0 < h) {
+        val rows = math.min(4, h - y0)
+        var x = 0
+        while (x < w) {
+          var i = at(x, y0)
+          var k = if ((column(i, rows) & Sig) == 0) rows else 0
+          while (k < rows) {
+            val f = flags(i)
+            if ((f & (Sig | Visit)) == Sig) {
+              val cx = if ((f & Refined) != 0) 16 else if ((f & NbSig) != 0) 15 else 14
+              val b = bit(cx, (mag(i) >>> p) & 1)
+              if (decoding) mag(i) |= b << p
+              flags(i) = f | Refined
+            }
+            i += stride; k += 1
           }
-          y += 1
+          x += 1
         }
-        x += 1
+        y0 += 4
       }
-      y0 += 4
     }
-  }
 
-  /** Clean-up pass with run-length mode (D.3.4). */
-  private def pass3(t: T1Block, io: MqIo, p: Int): Unit = {
-    var y0 = 0
-    while (y0 < t.h) {
-      var x = 0
-      while (x < t.w) {
-        var y = y0
-        // run-length mode: full stripe column, all four insignificant,
-        // unvisited, with entirely insignificant neighbourhoods
-        val full = y0 + 4 <= t.h
-        var rl = full
-        if (full) {
-          var k = y0
-          while (rl && k < y0 + 4) {
-            val i = t.at(x, k)
-            if (t.sig(i) || t.visited(i)) rl = false
+    /** Clean-up pass with run-length mode (D.3.4). */
+    private def pass3(p: Int): Unit = {
+      val s = stride
+      var y0 = 0
+      while (y0 < h) {
+        val rows = math.min(4, h - y0)
+        var x = 0
+        while (x < w) {
+          var i = at(x, y0)
+          var k = 0
+          // run-length mode: full stripe column, all four insignificant,
+          // unvisited, with entirely insignificant neighbourhoods
+          if (rows == 4 && (column(i, rows) & (Sig | Visit | NbSig)) == 0) {
+            val any = bit(CtxRl, ((mag(i) | mag(i + s) | mag(i + 2 * s) | mag(i + 3 * s)) >>> p) & 1)
+            if (any == 0) k = 4 // whole column confirmed zero
             else {
-              val (hh, vv, dd) = t.counts(x, k)
-              if (hh + vv + dd > 0) rl = false
+              // the encoder finds the first 1 bit; the decoder reads it
+              var r = 0
+              if (!decoding) while (((mag(i + r * s) >>> p) & 1) == 0) r += 1
+              val hi = bit(CtxUni, r >> 1)
+              r = (hi << 1) | bit(CtxUni, r & 1)
+              i += r * s
+              codeSign(i, p)
+              i += s; k = r + 1
             }
-            k += 1
           }
-        }
-        if (rl) {
-          val any = io.bit(CtxRl, {
-            var a = 0; var k = y0
-            while (k < y0 + 4) { if (((t.mag(t.at(x, k)) >>> p) & 1) == 1) a = 1; k += 1 }
-            a
-          })
-          if (any == 0) y = y0 + 4 // whole column confirmed zero
-          else {
-            val r = {
-              val hi = io.bit(CtxUni, {
-                var k = y0
-                while (((t.mag(t.at(x, k)) >>> p) & 1) == 0) k += 1
-                ((k - y0) >> 1) & 1
-              })
-              val lo = io.bit(CtxUni, {
-                var k = y0
-                while (((t.mag(t.at(x, k)) >>> p) & 1) == 0) k += 1
-                (k - y0) & 1
-              })
-              (hi << 1) | lo
-            }
-            codeSign(t, io, x, y0 + r, p)
-            y = y0 + r + 1
+          while (k < rows) {
+            val f = flags(i)
+            if ((f & (Sig | Visit)) == 0) {
+              val b = bit(ZcLut(zcBase | (f & NbSig)), (mag(i) >>> p) & 1)
+              if (b == 1) codeSign(i, p)
+            } else if ((f & Visit) != 0) flags(i) = f & ~Visit // ready for the next plane
+            i += s; k += 1
           }
+          x += 1
         }
-        while (y < math.min(y0 + 4, t.h)) {
-          val i = t.at(x, y)
-          if (!t.sig(i) && !t.visited(i)) {
-            val (hh, vv, dd) = t.counts(x, y)
-            val cx = zcContext(t.orient, hh, vv, dd)
-            val b = io.bit(cx, (t.mag(i) >>> p) & 1)
-            if (b == 1) codeSign(t, io, x, y, p)
-          }
-          y += 1
-        }
-        x += 1
+        y0 += 4
       }
-      y0 += 4
     }
-    java.util.Arrays.fill(t.visited, false)
-  }
 
-  /** Run `nPasses` coding passes starting from the MSB plane
-    * `planes - 1` (first plane: clean-up only). */
-  private def tier1(t: T1Block, io: MqIo, planes: Int, nPasses: Int): Unit = {
-    var done = 0
-    var p = planes - 1
-    while (p >= 0 && done < nPasses) {
-      if (p < planes - 1) {
-        if (done < nPasses) { pass1(t, io, p); done += 1 }
-        if (done < nPasses) { pass2(t, io, p); done += 1 }
+    /** Run `nPasses` coding passes starting from the MSB plane
+      * `planes - 1` (first plane: clean-up only). */
+    def run(planes: Int, nPasses: Int): Unit = {
+      var done = 0
+      var p = planes - 1
+      while (p >= 0 && done < nPasses) {
+        if (p < planes - 1) {
+          if (done < nPasses) { pass1(p); done += 1 }
+          if (done < nPasses) { pass2(p); done += 1 }
+        }
+        if (done < nPasses) { pass3(p); done += 1 }
+        p -= 1
       }
-      if (done < nPasses) { pass3(t, io, p); done += 1 }
-      p -= 1
     }
   }
 
@@ -875,7 +891,8 @@ object Jpeg2000Codec {
       val nx = (band.w + cbw - 1) / cbw; val ny = (band.h + cbh - 1) / cbh
       val incl = new TagTree(nx, ny); val zbp = new TagTree(nx, ny)
       val coded = blocks.map { cb =>
-        val t = new T1Block(cb.w, cb.h, band.orient)
+        val enc = new MqEncoder
+        val t = new T1(cb.w, cb.h, band.orient, enc, null)
         var maxMag = 0
         var y = 0
         while (y < cb.h) {
@@ -884,7 +901,7 @@ object Jpeg2000Codec {
             val v = plane((band.y0 + cb.y0 + y) * pw + (band.x0 + cb.x0 + x))
             val m = math.abs(v)
             t.mag(t.at(x, y)) = m
-            t.sgn(t.at(x, y)) = if (v < 0) 1 else 0
+            if (v < 0) t.flags(t.at(x, y)) = Neg
             if (m > maxMag) maxMag = m
             x += 1
           }
@@ -895,8 +912,7 @@ object Jpeg2000Codec {
         else {
           val planes = log2floor(maxMag) + 1
           val nPasses = 3 * planes - 2
-          val enc = new MqEncoder
-          tier1(t, new EncIo(enc), planes, nPasses)
+          t.run(planes, nPasses)
           Some((enc.finish(), nPasses, mb - planes))
         }
       }
@@ -972,18 +988,17 @@ object Jpeg2000Codec {
     var p = br.align()
     for ((band, cb, nPlanes, nPasses, dataLen) <- toDecode) {
       require(p + dataLen <= data.length, s"truncated code-block data in $path")
-      val seg = java.util.Arrays.copyOfRange(data, p, p + dataLen)
-      p += dataLen
       require(nPlanes >= 1 && nPasses <= 3 * nPlanes - 2,
         s"inconsistent pass count $nPasses for $nPlanes planes in $path")
-      val t = new T1Block(cb.w, cb.h, band.orient)
-      tier1(t, new DecIo(new MqDecoder(seg)), nPlanes, nPasses)
+      val t = new T1(cb.w, cb.h, band.orient, null, new MqDecoder(data, p, dataLen))
+      p += dataLen
+      t.run(nPlanes, nPasses)
       var y = 0
       while (y < cb.h) {
         var x = 0
         while (x < cb.w) {
           val i = t.at(x, y)
-          val v = if (t.sgn(i) == 1) -t.mag(i) else t.mag(i)
+          val v = if ((t.flags(i) & Neg) != 0) -t.mag(i) else t.mag(i)
           plane((band.y0 + cb.y0 + y) * pw + (band.x0 + cb.x0 + x)) = v
           x += 1
         }

@@ -203,23 +203,33 @@ class GraphSpec extends AnyFunSuite with Matchers {
   test("driver fast path == distributed loops (caps forced to 0) for every graph operator") {
     import spark.implicits._
     // seeded random weighted digraph, big enough to exercise every
-    // operator's interesting cases (sinks, zero-indegree, ties)
+    // operator's interesting cases (sinks, zero-indegree, ties), plus
+    // a source whose only out-edge has w = 0 (its rank contributes
+    // nothing on either path)
     val rng = new scala.util.Random(20260819L)
-    val edges = (1 to 400).map { _ =>
+    val edges = ((1 to 400).map { _ =>
       (rng.nextInt(40).toLong, rng.nextInt(40).toLong, (rng.nextInt(9) + 1).toLong)
-    }.distinct.filter(e => e._1 != e._2).toDF("src", "dst", "w")
+    }.distinct.filter(e => e._1 != e._2) :+ ((40L, 3L, 0L))).toDF("src", "dst", "w")
       .localCheckpoint()
+    // symmetric, so the distributed rank loops take their fast path;
+    // 4 <-> 5 carry w = 0 both ways, so 4 and 5 receive only the null
+    // contributions of zero out-weight sources
+    val symmetric = Seq((1L, 2L, 3L), (2L, 1L, 3L), (2L, 3L, 1L), (3L, 2L, 1L),
+      (4L, 5L, 0L), (5L, 4L, 0L)).toDF("src", "dst", "w")
     def rows(df: org.apache.spark.sql.DataFrame): List[Seq[Any]] =
       df.collect().map(_.toSeq).toList.sortBy(_.mkString(","))
     def all(): Map[String, List[Seq[Any]]] = Map(
       "pagerank" -> rows(Graph.pagerank(edges, iters = 4)),
       "ppr" -> rows(Graph.personalizedPagerank(edges,
         v => pmod(v, lit(5)) === 0, iters = 4)),
+      "pagerank-symmetric" -> rows(Graph.pagerank(symmetric, iters = 4)),
+      "ppr-symmetric" -> rows(Graph.personalizedPagerank(symmetric,
+        v => pmod(v, lit(2)) === 0, iters = 4)),
       "lpa" -> rows(Graph.labelPropagation(edges, iters = 3)),
       "harmonic" -> rows(Graph.harmonicCentrality(edges, radius = 2)),
       "neighborhood" -> rows(Graph.neighborhoodFunction(edges, radius = 2, k = 8)),
       "cheapest" -> rows(Graph.cheapestPaths(
-        edges.withColumn("cost", expr("1000000 div w")),
+        edges.withColumn("cost", expr("1000000 div greatest(w, 1)")),
         v => pmod(v, lit(5)) === 0, hops = 3)),
       "kcore" -> rows(Graph.kCore(edges, k = 3, maxRounds = 20)),
       "triangles" -> rows(Graph.triangleCounts(edges)),

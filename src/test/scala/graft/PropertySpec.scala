@@ -688,6 +688,106 @@ class PropertySpec extends AnyFunSuite with Matchers {
     an[IllegalArgumentException] should be thrownBy Jpeg2000Codec.decode(withRct, "c.j2k")
   }
 
+  test("JPEG 2000 codec: pinned codestream bytes for encode, encodeRgb and encode97, and their exact decode") {
+    import graft.sources.Jpeg2000Codec
+    // Round trips alone cannot catch a context-model change made in
+    // both directions at once; these SHA-256 pins can. Noise drives
+    // every zero-coding and sign context; blobs on a zero floor drive
+    // run-length mode in every plane.
+    def sha(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    def samples(v: Array[Int]): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(4 * v.length); v.foreach(bb.putInt); bb.array()
+    }
+    val rnd = new scala.util.Random(20261018L)
+    def image(w: Int, h: Int, bits: Int, blobs: Boolean): Array[Int] = {
+      val maxV = (1 << bits) - 1
+      if (!blobs) Array.fill(w * h)(rnd.nextInt(maxV + 1))
+      else {
+        val px = new Array[Int](w * h)
+        for (_ <- 0 until 3; y0 = rnd.nextInt(h); x0 = rnd.nextInt(w); v = rnd.nextInt(maxV + 1);
+             y <- y0 until math.min(h, y0 + 1 + rnd.nextInt(12));
+             x <- x0 until math.min(w, x0 + 1 + rnd.nextInt(12)))
+          px(y * w + x) = math.max(0, v - rnd.nextInt(4))
+        px
+      }
+    }
+    val got = Seq.newBuilder[(String, String)]
+    // encode: (w, h, bits, levels, cbxExp, cbyExp, tile, blobs)
+    for ((w, h, bits, lv, cbx, cby, tile, blobs) <- Seq(
+           (256, 256, 16, 2, 6, 6, 0, true), (150, 97, 12, 3, 5, 4, 0, false),
+           (64, 64, 8, 1, 6, 6, 0, false), (33, 17, 1, 0, 2, 2, 0, false),
+           (1, 70, 16, 2, 4, 6, 0, true), (129, 65, 16, 2, 3, 3, 0, true),
+           (70, 1, 10, 3, 6, 2, 0, false), (150, 100, 16, 2, 4, 4, 64, false),
+           (200, 130, 16, 2, 4, 4, 64, true))) {
+      val px = image(w, h, bits, blobs)
+      val enc = Jpeg2000Codec.encode(px, w, h, bits, lv, cbx, cby, tile, tile)
+      val label = s"encode ${w}x$h b$bits l$lv cb$cbx/$cby t$tile${if (blobs) " blobs" else ""}"
+      withClue(label) { Jpeg2000Codec.decode(enc, "pin.j2k")._4 shouldBe px }
+      got += label -> sha(enc)
+    }
+    // encodeRgb: with and without RCT, tiled and untiled
+    for ((w, h, tile) <- Seq((48, 40, 0), (100, 70, 64)); rct <- Seq(true, false)) {
+      val base = image(w, h, 8, blobs = false)
+      val planes = Seq(0, 1, 2).map(c => base.map(v => (v + 37 * c + rnd.nextInt(5)) & 0xff).toArray)
+      val enc = Jpeg2000Codec.encodeRgb(planes(0), planes(1), planes(2), w, h, 8, 2, 4, 4,
+        tile, tile, rct)
+      val label = s"encodeRgb ${w}x$h t$tile rct=$rct"
+      withClue(label) { Jpeg2000Codec.decodeFull(enc, "pin.j2k")._4.toSeq.map(_.toSeq) shouldBe
+        planes.map(_.toSeq) }
+      got += label -> sha(enc)
+    }
+    // encode97: the lossy decode is pinned by the hash of its samples
+    for ((w, h, bits, step, lv, blobs) <- Seq((96, 64, 16, 2.0, 2, false),
+           (50, 30, 8, 0.5, 3, false), (80, 80, 12, 4.0, 1, true))) {
+      val px = image(w, h, bits, blobs)
+      val enc = Jpeg2000Codec.encode97(px, w, h, bits, step, lv)
+      val label = s"encode97 ${w}x$h b$bits step$step l$lv"
+      got += label -> sha(enc)
+      got += s"$label decoded" -> sha(samples(Jpeg2000Codec.decode(enc, "pin.j2k")._4))
+    }
+    val pinned = Seq(
+      "encode 256x256 b16 l2 cb6/6 t0 blobs" ->
+        "2c3bd1273be3d755c3ec570a5ef14508d51fe5ab9b016e663f9121703d3b675f",
+      "encode 150x97 b12 l3 cb5/4 t0" ->
+        "0766224a27c82b9b34e18f48d4f041441ecc513159fe804bbcbccca09371ad2c",
+      "encode 64x64 b8 l1 cb6/6 t0" ->
+        "6d9f17882c50e47ad64b2f9e347ebde88db1f19f8e75c09f750890c9afcd9753",
+      "encode 33x17 b1 l0 cb2/2 t0" ->
+        "99fca9fa7603b578acc63263570146caeab74a1a943ed79c29bc5043a89c5039",
+      "encode 1x70 b16 l2 cb4/6 t0 blobs" ->
+        "6e2f4094287c451a8dd0e45cfec59db4eeaa4fc0c437ed866d63be0471c5b62f",
+      "encode 129x65 b16 l2 cb3/3 t0 blobs" ->
+        "b8cb1dad4fbe6fa0c3c042841d5bbe88ae3f27f4a3549e7348ab43c7f537fa5a",
+      "encode 70x1 b10 l3 cb6/2 t0" ->
+        "afff0d0009fb037ff91839c5da9c22b55fd95fd6d8d3bdf0340848e7b2dfe466",
+      "encode 150x100 b16 l2 cb4/4 t64" ->
+        "29719dc1eb1eff180300ba4de4a4008b86bea7f65dcd3a1fa5ecef7774bc03df",
+      "encode 200x130 b16 l2 cb4/4 t64 blobs" ->
+        "808de7f67c479a0b6c50072df89e316094e91c5c031ed8f515690cf54feb38a6",
+      "encodeRgb 48x40 t0 rct=true" ->
+        "f5c69f1b6a4b4163c468d7b3eb7bbc8b25c76ce1a69f5e14787cdf9f863a77d3",
+      "encodeRgb 48x40 t0 rct=false" ->
+        "bb436c1900c683871f31f48a2f47566fe7c30b25f09c24b898b9c8cd484adcd3",
+      "encodeRgb 100x70 t64 rct=true" ->
+        "375a57ffd8751200ce43079289505980821fc9b1cbc87e10bca739c2d2adbcbc",
+      "encodeRgb 100x70 t64 rct=false" ->
+        "b9e803c5179482f28ce873c5d767e7214ee45f2868ca08262555600240de3379",
+      "encode97 96x64 b16 step2.0 l2" ->
+        "df21dbcc105ced09cdebcd2ab2b4058cbc61b25bb0e1d5729d2ba6adbd78cb3e",
+      "encode97 96x64 b16 step2.0 l2 decoded" ->
+        "7384e35f26da18417fd3bd02952cfb4b38c985994646d0b1a6dd121ce7450cb0",
+      "encode97 50x30 b8 step0.5 l3" ->
+        "bcaa9e6d34661b617c238974913310a7ab96da9c289aa9072c9db9ad085a2918",
+      "encode97 50x30 b8 step0.5 l3 decoded" ->
+        "cd82f600b50b111cb18285d338b585a4f5adbe32bc6ae4b4c4a5747326ad4c88",
+      "encode97 80x80 b12 step4.0 l1" ->
+        "e5405d54c7559a3bfc6262e3bdb45437aae58380787b897ca9a826f7986882b6",
+      "encode97 80x80 b12 step4.0 l1 decoded" ->
+        "5af511a61247e86011c1c9ad790e8c23ed99fbb304a07ec8980386b3949a296b")
+    got.result() shouldBe pinned
+  }
+
   test("JPEG-LS near-lossless: |decoded - original| <= NEAR exactly, for every sample") {
     import graft.sources.JpegLsCodec
     val rnd = new scala.util.Random(23)

@@ -95,6 +95,65 @@ class SqlSurfaceSpec extends AnyFunSuite with Matchers {
     means.foreach(_ shouldBe 255.0) // 8-bit clamps the kilofills to 255
   }
 
+  test("imagedir scan deals sorted files round-robin: files that sort together spread out") {
+    import graft.sources.{ImageDirPartition, ImageDirScan, ImageDirSource}
+    val dir = java.nio.file.Files.createTempDirectory("graft_dirplan")
+    // six files sharing a prefix sort together, as one codec's files do
+    val names = (0 until 6).map(i => s"a_j2k_$i.dcm") ++ (0 until 6).map(i => s"b_$i.png")
+    names.foreach(n => java.nio.file.Files.write(dir.resolve(n), Array[Byte](1)))
+    def plan(): Seq[Seq[String]] =
+      new ImageDirScan(Map("path" -> dir.toString, "pattern" -> ".*", "partitions" -> "4"),
+        ImageDirSource.schema).planInputPartitions().toSeq
+        .map(_.asInstanceOf[ImageDirPartition].files.toSeq)
+    val parts = plan()
+    parts.length shouldBe 4
+    parts.indices.filter(p => parts(p).exists(_.contains("a_j2k_"))).size shouldBe 4
+    parts.flatten.sorted shouldBe names.map(n => dir.resolve(n).toString).sorted
+    parts.head shouldBe Seq(0, 4, 8).map(i => names.map(n => dir.resolve(n).toString).sorted.apply(i))
+    plan() shouldBe parts
+  }
+
+  test("binaryFiles reads a last-component glob as its directory: glob's rows, no job before the action") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_glob")
+    (0 until 40).foreach(i => Files.write(dir.resolve(f"s_$i%02d.dcm"), Array.fill[Byte](i + 1)(i.toByte)))
+    Files.write(dir.resolve("notes.txt"), Array[Byte](1, 2))
+    Files.write(dir.resolve("_hidden.dcm"), Array[Byte](3))
+    Files.write(Files.createDirectory(dir.resolve("sub")).resolve("s_99.dcm"), Array[Byte](9))
+    val glob = s"$dir/*.dcm"
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Seq[Byte])] =
+      df.select("path", "length", "content").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq)).toSeq.sortBy(_._1)
+    // jobs by group, read after a marker job: the listener bus delivers
+    // events in order, so once the marker is seen every earlier job is
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    def jobsWhileBuilding(group: String)(build: => org.apache.spark.sql.DataFrame) = {
+      sc.setJobGroup(group, "construction only")
+      val df = try build finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.contains(s"$group-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      started.contains(s"$group-marker") shouldBe true
+      (df, started.toArray.count(_ == group))
+    }
+    try {
+      val (globDf, globJobs) = jobsWhileBuilding("graft-glob")(spark.read.format("binaryFile").load(glob))
+      globJobs should be > 0 // above 32 root paths Spark lists with a job
+      val (dirDf, dirJobs) = jobsWhileBuilding("graft-dir")(ImageOps.binaryFiles(spark, glob))
+      dirJobs shouldBe 0
+      val expected = rows(globDf)
+      expected.length shouldBe 40
+      rows(dirDf) shouldBe expected
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("runRange parameter sweep fans out rows (scOps.scala:207-224)") {
     val swept = ImageQueries.debugImages(spark, count = 3)
       .runRange("Median...", ImageOps.linearRange("radius", 1, 3, 3))
