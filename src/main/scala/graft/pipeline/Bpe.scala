@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -114,9 +114,7 @@ object Bpe {
     * cost zero cluster jobs while the corpus-scale work (tokenize +
     * count, and the final per-doc application join) stays
     * distributed. Override with `graft.bpe.maxDriverVocab`. */
-  private def maxDriverVocab(spark: SparkSession): Long =
-    spark.conf.getOption("graft.bpe.maxDriverVocab").map(_.toLong)
-      .getOrElse(1000000L)
+  private val MaxDriverVocab = PartitionUtil.DriverCap("graft.bpe.maxDriverVocab", 1000000L)
 
   /** Symbols of a sentinel-wrapped segmentation — the driver-side
     * mirror of the `split(regexp_replace(seg, ...), SepSep)` column
@@ -198,7 +196,7 @@ object Bpe {
     *
     * Path choice (measured in round 16): the merge recurrence is
     * inherently sequential and VOCAB-bounded, so when the vocab fits
-    * [[maxDriverVocab]] the rounds run on the collected word table —
+    * [[MaxDriverVocab]] the rounds run on the collected word table —
     * zero cluster jobs per round instead of one aggregation each
     * (3.1 s → ~1.2 s for q140 at sf0.1), with identical results
     * (hash-gated; the [a a a] greedy-left case pinned in
@@ -217,7 +215,6 @@ object Bpe {
   private def trainLoop(docs: DataFrame,
                         rounds: Int): (Seq[(Long, String, String, Long, Long)], DataFrame) = {
     require(rounds > 0, "bpeTrain: rounds must be positive")
-    val spark = docs.sparkSession
     val words0 = PartitionUtil.spread(docs)
       .select(explode(Dedup.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
@@ -231,62 +228,58 @@ object Bpe {
     val totalFreq = Option(stats0.get(0)).fold(0L)(_.asInstanceOf[Long])
     val vocabSize = stats0.getLong(1)
 
-    if (vocabSize > 0 && vocabSize <= maxDriverVocab(spark)) {
-      import spark.implicits._
-      val wf = words0.select(col("word"), col("freq"))
-        .as[(String, Long)].collect()
+    var merges = Seq.empty[(Long, String, String, Long, Long)]
+    val out = StructType.fromDDL("word STRING NOT NULL, freq BIGINT NOT NULL, seg STRING NOT NULL")
+    val words = PartitionUtil.venue[(String, Long)](words0.select(col("word"), col("freq")),
+        vocabSize, MaxDriverVocab, out) { wf =>
       words0.unpersist()
-      val (merges, segs) = driverRounds(wf.map(_._1), wf.map(_._2), rounds)
-      val wordsFinal = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          wf.indices.map(i => Row(wf(i)._1, wf(i)._2, segs(i))), 1),
-        StructType(Seq(
-          StructField("word", StringType, nullable = false),
-          StructField("freq", LongType, nullable = false),
-          StructField("seg", StringType, nullable = false))))
-      return (merges, wordsFinal)
-    }
+      val (m, segs) = driverRounds(wf.map(_._1), wf.map(_._2), rounds)
+      merges = m
+      wf.indices.map(i => (wf(i)._1, wf(i)._2, segs(i)))
+    } {
+      // round r's aggregation reports (argmax merge of s_{r-1}, census of
+      // s_{r-1}); the census of round r-1's OUTPUT lands one iteration
+      // later, so merge metadata is completed with a 1-round lag
+      def roundAgg(w: DataFrame): (Long, String, String, Long) = {
+        val row = pairCounts(w).agg(
+          sum(col("cnt")),
+          min_by(struct(col("l"), col("r"), col("cnt")),
+            struct((-col("cnt")).as("nc"), col("l"), col("r")))).head()
+        require(!row.isNullAt(0),
+          s"BPE corpus exhausted: every word is a single symbol before $rounds rounds")
+        val best = row.getStruct(1)
+        (row.getLong(0), best.getString(0), best.getString(1), best.getLong(2))
+      }
 
-    // round r's aggregation reports (argmax merge of s_{r-1}, census of
-    // s_{r-1}); the census of round r-1's OUTPUT lands one iteration
-    // later, so merge metadata is completed with a 1-round lag
-    def roundAgg(w: DataFrame): (Long, String, String, Long) = {
-      val row = pairCounts(w).agg(
-        sum(col("cnt")),
-        min_by(struct(col("l"), col("r"), col("cnt")),
-          struct((-col("cnt")).as("nc"), col("l"), col("r")))).head()
-      require(!row.isNullAt(0),
-        s"BPE corpus exhausted: every word is a single symbol before $rounds rounds")
-      val best = row.getStruct(1)
-      (row.getLong(0), best.getString(0), best.getString(1), best.getLong(2))
-    }
-
-    val merges = Seq.newBuilder[(Long, String, String, Long, Long)]
-    var words = words0
-    var prev: DataFrame = null // unpersisted ONE ROUND LATE: round r's
-    // aggregation is what first materializes round r-1's persist, so
-    // r-2's cache must stay alive until that action has run — an eager
-    // unpersist would silently re-derive the whole chain every round
-    var pending: (Long, String, String, Long) = null // (round, l, r, cnt) awaiting census
-    var r = 1
-    while (r <= rounds) {
-      val (sumCnt, l, rt, cnt) = roundAgg(words)
+      val done = Seq.newBuilder[(Long, String, String, Long, Long)]
+      var words = words0
+      var prev: DataFrame = null // unpersisted ONE ROUND LATE: round r's
+      // aggregation is what first materializes round r-1's persist, so
+      // r-2's cache must stay alive until that action has run — an eager
+      // unpersist would silently re-derive the whole chain every round
+      var pending: (Long, String, String, Long) = null // (round, l, r, cnt) awaiting census
+      var r = 1
+      while (r <= rounds) {
+        val (sumCnt, l, rt, cnt) = roundAgg(words)
+        if (prev != null) prev.unpersist()
+        prev = words
+        if (pending != null)
+          done += ((pending._1, pending._2, pending._3, pending._4, sumCnt + totalFreq))
+        pending = (r.toLong, l, rt, cnt)
+        words = words.withColumn("seg",
+            replace(col("seg"), lit(s"$Sep$l$Sep$Sep$rt$Sep"), lit(s"$Sep$l$rt$Sep")))
+          .persist()
+        r += 1
+      }
+      // the last round's census: one Σ(|symbols|-1) pass over the final table
+      val lastPairs = Option(pairCounts(words).agg(sum(col("cnt"))).head().get(0))
+        .fold(0L)(_.asInstanceOf[Long])
       if (prev != null) prev.unpersist()
-      prev = words
-      if (pending != null)
-        merges += ((pending._1, pending._2, pending._3, pending._4, sumCnt + totalFreq))
-      pending = (r.toLong, l, rt, cnt)
-      words = words.withColumn("seg",
-          replace(col("seg"), lit(s"$Sep$l$Sep$Sep$rt$Sep"), lit(s"$Sep$l$rt$Sep")))
-        .persist()
-      r += 1
+      done += ((pending._1, pending._2, pending._3, pending._4, lastPairs + totalFreq))
+      merges = done.result()
+      words
     }
-    // the last round's census: one Σ(|symbols|-1) pass over the final table
-    val lastPairs = Option(pairCounts(words).agg(sum(col("cnt"))).head().get(0))
-      .fold(0L)(_.asInstanceOf[Long])
-    if (prev != null) prev.unpersist()
-    merges += ((pending._1, pending._2, pending._3, pending._4, lastPairs + totalFreq))
-    (merges.result(), words)
+    (merges, words)
   }
 
   /** DuckDB oracle for [[bpeTrain]] over `documents` — the `rounds`

@@ -33,7 +33,7 @@ object Decontam {
     val spark = docs.sparkSession
     val sh = PartitionUtil.spread(docs)
       .select(col("doc_id"), isBench.as("is_bench"),
-        explode(Dedup.shingles(col("text"), n)).as("shingle"))
+        explode(Dedup.shingles(docs, col("text"), n)).as("shingle"))
     // distinct benchmark shingles feed three consumers (count, Bloom
     // build, verification join) — materialize once
     val bench = sh.filter(col("is_bench")).select(col("shingle")).distinct()

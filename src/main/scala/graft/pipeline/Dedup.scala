@@ -31,10 +31,11 @@ object Dedup {
     * expression ([[graft.functions.WordShingles]]): no catalyst→Seq
     * deserialization, no closure call per document (optimization
     * guide §1.2 per-task work / "functions, not UDFs"). Bit-identical
-    * to the retired [[shingleUdf]], pinned in PropertySpec. */
-  def shingles(text: Column, n: Int): Column = {
-    graft.functions.MinhashExpressions.register(
-      org.apache.spark.sql.SparkSession.active)
+    * to the retired [[shingleUdf]], pinned in PropertySpec. The
+    * function is registered on `docs`' own session, which resolves it
+    * when the column is used on `docs`. */
+  def shingles(docs: DataFrame, text: Column, n: Int): Column = {
+    graft.functions.MinhashExpressions.register(docs.sparkSession)
     graft.functions.MinhashExpressions.wordShingles(tokens(text), n)
   }
 
@@ -152,7 +153,7 @@ object Dedup {
     // materialization that MEMORY_AND_DISK spills — so the persist
     // stays as the 100 TB default.
     val sh = PartitionUtil.spread(docs)
-      .select(col("doc_id"), shingles(col("text"), n).as("sh"))
+      .select(col("doc_id"), shingles(docs, col("text"), n).as("sh"))
       .withColumn("sz", size(col("sh")).cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val posting = sh.select(col("doc_id"), col("sz"), explode(col("sh")).as("s"))
@@ -438,9 +439,14 @@ object Dedup {
     // band-key exchanges collapse via ReuseExchange — the banding still
     // computes once; only the local broadcast-join regime ever ran it
     // twice, and there recompute beats the checkpoint write+read.
-    val mode = docs.sparkSession.conf.get("graft.dedup.lshPairsMaterialize", "plain")
+    // `plain` needs a deterministic input: each join side evaluates it
+    // again, and a nondeterministic one would band different documents
+    // on each side, so such an input is always checkpointed.
+    val mode =
+      if (!docs.queryExecution.analyzed.deterministic) "checkpoint"
+      else docs.sparkSession.conf.get("graft.dedup.lshPairsMaterialize", "plain")
     val banded0 = PartitionUtil.spread(docs)
-      .select(col("doc_id"), shingles(col("text"), shingleN).as("sh"))
+      .select(col("doc_id"), shingles(docs, col("text"), shingleN).as("sh"))
       .select(col("doc_id"), posexplode(
         graft.functions.MinhashExpressions.minhashBands(col("sh"), numHashes, r)))
       .select(col("doc_id"), col("pos").as("band_idx"), col("col").as("band_hash"))
@@ -1033,10 +1039,9 @@ object Dedup {
     // non-convergence failure) runs on the collected pairs. The
     // distributed loop is the fallback for pair sets that outgrow the
     // cap (a pathological corpus where near-everything collides).
-    if (p0.count() <=
-        pairs.sparkSession.conf.get("graft.dedup.maxDriverPairs", "2000000").toLong) {
-      import pairs.sparkSession.implicits._
-      val pArr = p0.as[(Long, Long)].collect()
+    PartitionUtil.venue[(Long, Long)](p0, p0.count(),
+        PartitionUtil.DriverCap("graft.dedup.maxDriverPairs", 2000000L),
+        org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, rep BIGINT")) { pArr =>
       val nbrs = (pArr.map { case (a, b) => (a, b) } ++
         pArr.map { case (a, b) => (b, a) })
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
@@ -1061,57 +1066,53 @@ object Dedup {
       }
       require(changed == 0L,
         s"dedupGroups did not converge after $maxIters rounds ($changed labels still moving)")
-      import scala.jdk.CollectionConverters._
-      return pairs.sparkSession.createDataFrame(
-        labels.toSeq.map { case (id, rep) => org.apache.spark.sql.Row(id, rep) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq("id", "rep").map(n =>
-          org.apache.spark.sql.types.StructField(n,
-            org.apache.spark.sql.types.LongType, nullable = true))))
+      labels
+    } {
+      // lazy checkpoint: materialized by the first round's convergence
+      // count — p0 above is eager so the union's two branches read the
+      // stored pair partitions instead of re-running the upstream plan
+      val sym = PartitionUtil.materialize(
+        p0.select(col("id_a").as("src"), col("id_b").as("dst"))
+          .union(p0.select(col("id_b").as("src"), col("id_a").as("dst"))),
+        checkpointDir, eager = false)
+      // fused round 0: from identity labels, one propagation step is just
+      // rep = min(id, min neighbor id) — no distinct, no join
+      var labels = PartitionUtil.materialize(
+        sym.groupBy(col("src")).agg(min(col("dst")).as("m"))
+          .select(col("src").as("id"), least(col("src"), col("m")).as("rep")),
+        checkpointDir, eager = false)
+      var changed = 1L
+      var iter = 0
+      while (changed > 0 && iter < maxIters) {
+        // one propagation step: rep := min(rep, min of neighbors' reps)
+        val nbrMin = sym.join(labels.select(col("id").as("dst"), col("rep").as("nbr_rep")), Seq("dst"))
+          .groupBy(col("src")).agg(min(col("nbr_rep")).as("nbr_min"))
+        val stepped = labels
+          .join(nbrMin.select(col("src").as("id"), col("nbr_min")), Seq("id"), "left")
+          .select(col("id"), col("rep").as("old_rep"),
+            least(col("rep"), coalesce(col("nbr_min"), col("rep"))).as("mid"))
+        // pointer jumping: rep := min(rep, rep(rep)) — labels double-hop
+        // per round, so rounds grow as log(diameter), not diameter
+        val jumped = stepped
+          .join(labels.select(col("id").as("mid"), col("rep").as("jump")), Seq("mid"), "left")
+          .select(col("id"), col("old_rep"),
+            least(col("mid"), coalesce(col("jump"), col("mid"))).as("rep"))
+        val jumpedM = PartitionUtil.materialize(jumped, checkpointDir,
+          eager = false) // the convergence count materializes it
+        changed = jumpedM.filter(col("rep") =!= col("old_rep")).count()
+        labels = jumpedM
+        iter += 1
+      }
+      // fail LOUDLY on non-convergence: a silent exit here would hand
+      // downstream keep/drop decisions labels that still point into the
+      // middle of a chain. With pointer jumping rounds grow as
+      // log2(diameter), so 50 rounds covers any graph that fits on
+      // earth; hitting this is a bug or an adversarial input worth
+      // knowing about, not something to paper over.
+      require(changed == 0L,
+        s"dedupGroups did not converge after $maxIters rounds ($changed labels still moving)")
+      labels.select(col("id"), col("rep"))
     }
-    // lazy checkpoint: materialized by the first round's convergence
-    // count — p0 above is eager so the union's two branches read the
-    // stored pair partitions instead of re-running the upstream plan
-    val sym = PartitionUtil.materialize(
-      p0.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(p0.select(col("id_b").as("src"), col("id_a").as("dst"))),
-      checkpointDir, eager = false)
-    // fused round 0: from identity labels, one propagation step is just
-    // rep = min(id, min neighbor id) — no distinct, no join
-    var labels = PartitionUtil.materialize(
-      sym.groupBy(col("src")).agg(min(col("dst")).as("m"))
-        .select(col("src").as("id"), least(col("src"), col("m")).as("rep")),
-      checkpointDir, eager = false)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      // one propagation step: rep := min(rep, min of neighbors' reps)
-      val nbrMin = sym.join(labels.select(col("id").as("dst"), col("rep").as("nbr_rep")), Seq("dst"))
-        .groupBy(col("src")).agg(min(col("nbr_rep")).as("nbr_min"))
-      val stepped = labels
-        .join(nbrMin.select(col("src").as("id"), col("nbr_min")), Seq("id"), "left")
-        .select(col("id"), col("rep").as("old_rep"),
-          least(col("rep"), coalesce(col("nbr_min"), col("rep"))).as("mid"))
-      // pointer jumping: rep := min(rep, rep(rep)) — labels double-hop
-      // per round, so rounds grow as log(diameter), not diameter
-      val jumped = stepped
-        .join(labels.select(col("id").as("mid"), col("rep").as("jump")), Seq("mid"), "left")
-        .select(col("id"), col("old_rep"),
-          least(col("mid"), coalesce(col("jump"), col("mid"))).as("rep"))
-      val jumpedM = PartitionUtil.materialize(jumped, checkpointDir,
-        eager = false) // the convergence count materializes it
-      changed = jumpedM.filter(col("rep") =!= col("old_rep")).count()
-      labels = jumpedM
-      iter += 1
-    }
-    // fail LOUDLY on non-convergence: a silent exit here would hand
-    // downstream keep/drop decisions labels that still point into the
-    // middle of a chain. With pointer jumping rounds grow as
-    // log2(diameter), so 50 rounds covers any graph that fits on
-    // earth; hitting this is a bug or an adversarial input worth
-    // knowing about, not something to paper over.
-    require(changed == 0L,
-      s"dedupGroups did not converge after $maxIters rounds ($changed labels still moving)")
-    labels.select(col("id"), col("rep"))
   }
 
   /** Canonical representative selection — the final keep/drop decision

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType.fromDDL
 
 /** Link-graph analytics for corpus quality weighting.
   *
@@ -42,49 +43,34 @@ object Graph {
 
   // ---- driver fast path for small graphs -------------------------------
   //
-  // The round-16/17 dissections (ProfileR16 prx/prx2, ProfileR17 grloop)
-  // measured ~210–250 ms PER ITERATION of the distributed loops at
-  // sf0.1 regardless of AQE, shuffle-partition count, edge partitioning,
-  // checkpoint cadence or rank broadcasting — the cost is Spark's
-  // per-stage machinery (scheduling, codegen, exchange setup), not the
-  // integer arithmetic, which on a graph this size is sub-millisecond.
-  // First-principles (guide §1.1/§1.2): the cheapest execution of a
-  // 10-round integer recurrence over a megabyte-scale edge set is a
-  // tight in-memory loop — so, exactly like the BPE driver-side merge
-  // rounds (`graft.bpe.maxDriverVocab`, round 16) and the k-means fits,
-  // the iteration loops run DRIVER-SIDE when the already-materialized
-  // edge relation is small enough to collect under a conf-bounded cap,
-  // with bit-identical integer arithmetic (Long sums are
-  // reduction-order-free) and the distributed loop untouched as the
-  // 100 TB fallback. The gate reads the edge count the preamble already
-  // computes — no extra pass on either path. GraphSpec pins
-  // driver == distributed on seeded random graphs for every operator.
-  //
-  // Two caps because per-round work differs in shape:
-  //  - maxDriverEdges (default 2M): the O(|E|)-per-round loops
-  //    (pagerank, personalized pagerank, label propagation, min-plus
-  //    relaxation, k-core peeling). 2M edges ≈ 64 MB collected.
-  //  - maxDriverEdgesQuadratic (default 256k): the ball/wedge operators
-  //    (bounded-radius BFS, HyperBall sketches, triangles, link
-  //    prediction) whose work is Σ|ball| / Σdeg², super-linear in |E|.
-  private[graft] def maxDriverEdges(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.graph.maxDriverEdges", "2000000").toLong
-  private[graft] def maxDriverEdgesQuad(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.graph.maxDriverEdgesQuadratic", "262144").toLong
+  // A distributed round costs ~0.2 s of Spark stage machinery at sf0.1,
+  // while its integer arithmetic on a graph that size is
+  // sub-millisecond. So every iterative operator below runs its loop on
+  // the driver, over the collected edges, exactly when its
+  // already-materialized edge relation has 0 < rows <= cap; otherwise
+  // (cap 0 always, and any empty input) the distributed loop runs. Both
+  // venues return the operator's one declared schema, and Long sums are
+  // order-free, so they return the same rows. The gate is
+  // [[PartitionUtil.venue]]; GraphSpec pins driver == distributed, rows
+  // and schema, for every operator on adversarial inputs. Two caps,
+  // because per-round work differs in shape: `Linear` for the
+  // O(|E|)-per-round loops (2M edges, about 64 MB collected),
+  // `Quadratic` for the ball/wedge operators whose work is super-linear
+  // in |E| (bounded BFS, HyperBall sketches, triangles, link prediction).
+  private val Linear = PartitionUtil.DriverCap("graft.graph.maxDriverEdges", 2000000L)
+  private val Quadratic =
+    PartitionUtil.DriverCap("graft.graph.maxDriverEdgesQuadratic", 262144L)
 
-  /** Small all-BIGINT result relation for the driver fast paths —
-    * schema (names, LongType, nullable) matches what the distributed
-    * aggregates produce, so the two paths are indistinguishable to
-    * consumers and to the oracle gate. */
-  private def longDf(spark: org.apache.spark.sql.SparkSession,
-                     names: Seq[String], rows: Seq[Array[Long]]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq)).asJava,
-      org.apache.spark.sql.types.StructType(names.map(n =>
-        org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.LongType, nullable = true))))
-  }
+  /** Partitions for a distributed loop over `m` rows of `df`: about 2M
+    * rows each (a narrow coalesce, no shuffle), capped at the inherited
+    * partitioning so a genuinely large graph keeps its parallelism. A
+    * small graph otherwise pays every round in full-width task
+    * launches (measured 4x slower at |E| ~ 10^4). */
+  private def loopParts(df: DataFrame, m: Long): Int =
+    math.max(1L, math.min(df.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt
+
+  /** The output of [[pagerank]] and [[personalizedPagerank]]. */
+  private val RankOut = fromDDL("v BIGINT, rank BIGINT")
 
   /** Driver kernel: the exact [[pagerank]] / [[personalizedPagerank]]
     * recurrence over collected (src, dst, w) edges with the
@@ -95,7 +81,7 @@ object Graph {
   private[graft] def driverRankLoop(ew: Array[(Long, Long, Long)],
                                     iters: Int,
                                     rank0: Long => Long,
-                                    baseOf: Long => Long): Seq[Array[Long]] = {
+                                    baseOf: Long => Long): Seq[(Long, Long)] = {
     val ow = new java.util.HashMap[Long, Long]()
     ew.foreach { case (src, _, w) => ow.merge(src, w, (a, b) => a + b) }
     val nodes = ew.map(_._1).distinct
@@ -119,7 +105,7 @@ object Graph {
       }
       rank = next
     }
-    nodes.toSeq.map(v => Array(v, rank.get(v)))
+    nodes.toSeq.map(v => (v, rank.get(v)))
   }
 
   /** Supplier co-occurrence edges from lineitem: (src, dst, w) with
@@ -203,100 +189,89 @@ object Graph {
     val e0m = PartitionUtil.materialize(
       edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
       checkpointDir)
-    val mEdges = e0m.count()
     // driver fast path (see the header note): the 10 integer rounds —
     // and the whole preamble (out-weights, |V|, max-w guard) — run on
     // the collected edges; no vertex-stats pass, no out-weight join
-    if (mEdges <= maxDriverEdges(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e0m.as[(Long, Long, Long)].collect()
-      val n = ewArr.iterator.map(_._1).toSet.size.toLong
-      require(n > 0, "pagerank: empty edge set")
-      val maxW = if (ewArr.isEmpty) 0L else ewArr.iterator.map(_._3).max
+    PartitionUtil.venue[(Long, Long, Long)](e0m, e0m.count(), Linear, RankOut) { ew =>
+      val n = ew.iterator.map(_._1).toSet.size.toLong
+      val maxW = ew.iterator.map(_._3).max
       require(maxW <= Long.MaxValue / Scale,
         s"pagerank: edge weight $maxW would overflow rank*w at scale $Scale")
       val base0 = (3L * Scale) / (20L * n)
-      return longDf(edges.sparkSession, Seq("v", "rank"),
-        driverRankLoop(ewArr, iters, _ => Scale / n, _ => base0))
+      driverRankLoop(ew, iters, _ => Scale / n, _ => base0)
+    } {
+      val outw = e0m.groupBy(col("src")).agg(sum(col("w")).as("ow"))
+      // loop-invariant edge relation with out-weights attached once;
+      // eagerly materialized so no iteration re-runs edge construction
+      val ew0 = PartitionUtil.materialize(
+        e0m.join(outw, Seq("src"))
+          .select(col("src"), col("dst"), col("w"), col("ow")),
+        checkpointDir)
+      // ONE materialized |V|-sized vertex-stats relation + ONE tiny
+      // aggregate over it replace the preamble's three separate
+      // edge-scan jobs (stats agg, node materialization, src/dst
+      // mismatch probe) — guide §1.2, fewer passes; every preamble fact
+      // (|V|, |E|, max w, zero-indegree / sink flags, the node set
+      // itself) reads off the same pass
+      val vstats = vertexStats(ew0, checkpointDir)
+      val g = vstats.agg(max(col("mw")).as("mw"), count(col("src")).as("n"),
+        sum(col("cnt")).as("m"),
+        max(when(col("dst").isNull, 1).otherwise(0)).as("zi"),
+        max(when(col("src").isNull, 1).otherwise(0)).as("sk")).head()
+      val maxW = Option(g.get(0)).fold(0L)(_.asInstanceOf[Long])
+      val n = g.getLong(1)
+      val m = Option(g.get(2)).fold(0L)(_.asInstanceOf[Long])
+      require(n > 0, "pagerank: empty edge set")
+      require(maxW <= Long.MaxValue / Scale,
+        s"pagerank: edge weight $maxW would overflow rank*w at scale $Scale")
+      val parts = loopParts(ew0, m)
+      // pre-partitioned: ONE hash exchange on src, cached via persist()
+      // — an InMemoryRelation KEEPS its output partitioning (a
+      // checkpoint's LogicalRDD does not under AQE), so every
+      // iteration's rank join sees an already-partitioned edge side and
+      // shuffles only the rank vector (asserted in GraphSpec). Lost
+      // cached blocks recompute from the materialized ew0 — one shuffle,
+      // bounded lineage. Default: narrow coalesce, no shuffle at all —
+      // right when iters is small or the graph fits a few partitions.
+      val ew =
+        if (prePartitionEdges) {
+          val p = ew0.repartition(parts, col("src")).persist()
+          p.count()
+          p
+        } else ew0.coalesce(parts)
+      val base = (3L * Scale) / (20L * n) // 0.15/N in fixed point
+      // node set = the non-null-src rows of the already-materialized
+      // vertex stats — no separate distinct+materialize job
+      val nodes = vstats.filter(col("src").isNotNull).select(col("src").as("v"))
+      // Both iteration paths must return the SAME row set: `nodes`
+      // (distinct src). The fast path keys each step's rank vector off
+      // the contribution aggregate (grouped by dst), which equals
+      // `nodes` only when src-set == dst-set — so it is taken only when
+      // (a) no node has out-edges without in-edges (such a node gets no
+      // contribution row yet must keep contributing its constant `base`
+      // rank), and (b) no pure sink exists (a dst-only node would gain
+      // a spurious rank row). Both hold for any symmetric graph, e.g.
+      // co-occurrence. The node left-join then drops out — one less
+      // shuffle per iteration, and the remaining join+agg chain is
+      // reference-free so lineage can accumulate safely between the
+      // every-5th-iteration checkpoints (measured 2.6x faster at
+      // |E| ~ 10^4; at large |E| the join+agg dominates either way).
+      val needNodeJoin = g.getInt(3) == 1 || g.getInt(4) == 1
+      var rank = nodes.select(col("v"), lit(Scale / n).as("rank"))
+      for (k <- 1 to iters) {
+        val stepped = pagerankStep(ew, rank, base,
+          if (needNodeJoin) Some(nodes) else None)
+        // slow path: checkpoint every round (nodes + contrib both derive
+        // from ew — chaining would self-join ambiguous lineage); fast
+        // path: bound plan depth without a per-iteration job
+        rank =
+          if (needNodeJoin || k % 5 == 0 || k == iters)
+            PartitionUtil.materialize(stepped, checkpointDir)
+          else stepped
+      }
+      if (prePartitionEdges) ew.unpersist(false) // rank is materialized
+      rank
     }
-    val outw = e0m.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    // loop-invariant edge relation with out-weights attached once;
-    // eagerly materialized so no iteration re-runs edge construction
-    val ew0 = PartitionUtil.materialize(
-      e0m.join(outw, Seq("src"))
-        .select(col("src"), col("dst"), col("w"), col("ow")),
-      checkpointDir)
-    // ONE materialized |V|-sized vertex-stats relation + ONE tiny
-    // aggregate over it replace the preamble's three separate
-    // edge-scan jobs (stats agg, node materialization, src/dst
-    // mismatch probe) — guide §1.2, fewer passes; every preamble fact
-    // (|V|, |E|, max w, zero-indegree / sink flags, the node set
-    // itself) reads off the same pass
-    val vstats = vertexStats(ew0, checkpointDir)
-    val g = vstats.agg(max(col("mw")).as("mw"), count(col("src")).as("n"),
-      sum(col("cnt")).as("m"),
-      max(when(col("dst").isNull, 1).otherwise(0)).as("zi"),
-      max(when(col("src").isNull, 1).otherwise(0)).as("sk")).head()
-    val maxW = Option(g.get(0)).fold(0L)(_.asInstanceOf[Long])
-    val n = g.getLong(1)
-    val m = Option(g.get(2)).fold(0L)(_.asInstanceOf[Long])
-    require(n > 0, "pagerank: empty edge set")
-    require(maxW <= Long.MaxValue / Scale,
-      s"pagerank: edge weight $maxW would overflow rank*w at scale $Scale")
-    // size the per-iteration jobs to the graph, not the session: ~2M
-    // edges per partition (narrow coalesce over the checkpointed
-    // blocks — no shuffle), capped at the inherited partitioning so a
-    // genuinely large graph keeps its parallelism. Without this, a
-    // small graph pays 10 iterations of full-width task launches —
-    // measured 4x slower at |E| ~ 10^4.
-    val parts = math.max(1L,
-      math.min(ew0.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt
-    // pre-partitioned: ONE hash exchange on src, cached via persist()
-    // — an InMemoryRelation KEEPS its output partitioning (a
-    // checkpoint's LogicalRDD does not under AQE), so every
-    // iteration's rank join sees an already-partitioned edge side and
-    // shuffles only the rank vector (asserted in GraphSpec). Lost
-    // cached blocks recompute from the materialized ew0 — one shuffle,
-    // bounded lineage. Default: narrow coalesce, no shuffle at all —
-    // right when iters is small or the graph fits a few partitions.
-    val ew =
-      if (prePartitionEdges) {
-        val p = ew0.repartition(parts, col("src")).persist()
-        p.count()
-        p
-      } else ew0.coalesce(parts)
-    val base = (3L * Scale) / (20L * n) // 0.15/N in fixed point
-    // node set = the non-null-src rows of the already-materialized
-    // vertex stats — no separate distinct+materialize job
-    val nodes = vstats.filter(col("src").isNotNull).select(col("src").as("v"))
-    // Both iteration paths must return the SAME row set: `nodes`
-    // (distinct src). The fast path keys each step's rank vector off
-    // the contribution aggregate (grouped by dst), which equals
-    // `nodes` only when src-set == dst-set — so it is taken only when
-    // (a) no node has out-edges without in-edges (such a node gets no
-    // contribution row yet must keep contributing its constant `base`
-    // rank), and (b) no pure sink exists (a dst-only node would gain
-    // a spurious rank row). Both hold for any symmetric graph, e.g.
-    // co-occurrence. The node left-join then drops out — one less
-    // shuffle per iteration, and the remaining join+agg chain is
-    // reference-free so lineage can accumulate safely between the
-    // every-5th-iteration checkpoints (measured 2.6x faster at
-    // |E| ~ 10^4; at large |E| the join+agg dominates either way).
-    val needNodeJoin = g.getInt(3) == 1 || g.getInt(4) == 1
-    var rank = nodes.select(col("v"), lit(Scale / n).as("rank"))
-    for (k <- 1 to iters) {
-      val stepped = pagerankStep(ew, rank, base,
-        if (needNodeJoin) Some(nodes) else None)
-      // slow path: checkpoint every round (nodes + contrib both derive
-      // from ew — chaining would self-join ambiguous lineage); fast
-      // path: bound plan depth without a per-iteration job
-      rank =
-        if (needNodeJoin || k % 5 == 0 || k == iters)
-          PartitionUtil.materialize(stepped, checkpointDir)
-        else stepped
-    }
-    if (prePartitionEdges) ew.unpersist(false) // rank is materialized
-    rank
   }
 
   /** Personalized PageRank (TrustRank-style) from a SEED SET: the
@@ -324,93 +299,88 @@ object Graph {
     val e0m = PartitionUtil.materialize(
       edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
       checkpointDir)
-    val mEdges = e0m.count()
     // driver fast path (see the header note). The seed predicate is a
     // Column, so it evaluates over a LOCAL relation of the node ids —
     // one LocalTableScan job, no cluster pass.
-    if (mEdges <= maxDriverEdges(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e0m.as[(Long, Long, Long)].collect()
-      require(ewArr.nonEmpty, "personalizedPagerank: empty edge set")
-      val maxWd = ewArr.iterator.map(_._3).max
+    PartitionUtil.venue[(Long, Long, Long)](e0m, e0m.count(), Linear, RankOut) { ew =>
+      val maxWd = ew.iterator.map(_._3).max
       require(maxWd <= Long.MaxValue / Scale,
         s"personalizedPagerank: edge weight $maxWd would overflow rank*w at scale $Scale")
-      val nodes = ewArr.map(_._1).distinct
-      val seedSet = longDf(edges.sparkSession, Seq("v"), nodes.toSeq.map(Array(_)))
-        .filter(isSeed(col("v")).cast("boolean")).as[Long].collect().toSet
+      val seedSet = edges.sparkSession
+        .createDataset(ew.map(_._1).distinct.toSeq)(Encoders.scalaLong).toDF("v")
+        .filter(isSeed(col("v")).cast("boolean")).as(Encoders.scalaLong).collect().toSet
       require(seedSet.nonEmpty,
         "personalizedPagerank: seed predicate matched no node")
       val baseD = (3L * Scale) / (20L * seedSet.size)
-      return longDf(edges.sparkSession, Seq("v", "rank"),
-        driverRankLoop(ewArr, iters,
-          v => if (seedSet.contains(v)) Scale / seedSet.size else 0L,
-          v => if (seedSet.contains(v)) baseD else 0L))
+      driverRankLoop(ew, iters,
+        v => if (seedSet.contains(v)) Scale / seedSet.size else 0L,
+        v => if (seedSet.contains(v)) baseD else 0L)
+    } {
+      val outw = e0m.groupBy(col("src")).agg(sum(col("w")).as("ow"))
+      val ew0 = PartitionUtil.materialize(
+        e0m.join(outw, Seq("src"))
+          .select(col("src"), col("dst"), col("w"), col("ow")),
+        checkpointDir)
+      // the same fused preamble as [[pagerank]]: one materialized
+      // vertex-stats pass + one tiny aggregate replace the separate
+      // stats scan, seeded-node materialization, seed count and
+      // src/dst-mismatch probe (4 sequential jobs -> 2); the seed flag
+      // is a pure function of the node id, so |seeds| rides the same
+      // aggregate
+      val vstats = vertexStats(ew0, checkpointDir)
+      val g = vstats.agg(max(col("mw")).as("mw"), sum(col("cnt")).as("m"),
+        max(when(col("dst").isNull, 1).otherwise(0)).as("zi"),
+        max(when(col("src").isNull, 1).otherwise(0)).as("sk"),
+        sum(when(col("src").isNotNull && isSeed(col("src")).cast("boolean"), 1L)
+          .otherwise(0L)).as("nseeds")).head()
+      val maxW = Option(g.get(0)).fold(0L)(_.asInstanceOf[Long])
+      val m = Option(g.get(1)).fold(0L)(_.asInstanceOf[Long])
+      require(m > 0, "personalizedPagerank: empty edge set")
+      require(maxW <= Long.MaxValue / Scale,
+        s"personalizedPagerank: edge weight $maxW would overflow rank*w at scale $Scale")
+      val parts = loopParts(ew0, m)
+      val ew =
+        if (prePartitionEdges) {
+          val p = ew0.repartition(parts, col("src")).persist()
+          p.count()
+          p
+        } else ew0.coalesce(parts)
+      // seed flag rides on the node relation — ONE boolean column
+      // projected off the materialized vertex stats, no separate seed
+      // join anywhere in the loop and no extra materialization job
+      val seeded = vstats.filter(col("src").isNotNull)
+        .select(col("src").as("v"), isSeed(col("src")).cast("boolean").as("s"))
+      val nSeeds = Option(g.get(4)).fold(0L)(_.asInstanceOf[Long])
+      require(nSeeds > 0, "personalizedPagerank: seed predicate matched no node")
+      val base = (3L * Scale) / (20L * nSeeds)
+      // fast path (the pagerank pattern, measured on the q130 graph):
+      // when src and dst sets coincide the per-round seeded left join
+      // drops out — the seed flag is a pure function of the node id, so
+      // it evaluates dst-side ON the edge relation with no join and no
+      // extra shuffle (preserving a prePartitionEdges layout), and each
+      // round is ONE join + ONE agg ([[pprFastStep]]). One fused probe
+      // job decides ([[srcDstMismatch]]); asymmetric graphs keep the
+      // seeded-join path.
+      val fast = !(g.getInt(2) == 1 || g.getInt(3) == 1)
+      val ewS = if (fast)
+        ew.withColumn("sd", isSeed(col("dst")).cast("boolean")) else ew
+      var rank = seeded.select(col("v"),
+        when(col("s"), lit(Scale / nSeeds)).otherwise(lit(0L)).as("rank"))
+      for (k <- 1 to iters) {
+        val stepped =
+          if (fast) pprFastStep(ewS, rank, base)
+          else pprStep(ew, seeded, rank, base)
+        // seeded and the contrib chain both bottom out in materialized
+        // relations, so lineage accumulates safely between every-5th
+        // checkpoints — the pagerank fast-path pattern
+        rank =
+          if (k % 5 == 0 || k == iters)
+            PartitionUtil.materialize(stepped, checkpointDir)
+          else stepped
+      }
+      if (prePartitionEdges) ew.unpersist(false)
+      rank
     }
-    val outw = e0m.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val ew0 = PartitionUtil.materialize(
-      e0m.join(outw, Seq("src"))
-        .select(col("src"), col("dst"), col("w"), col("ow")),
-      checkpointDir)
-    // the same fused preamble as [[pagerank]]: one materialized
-    // vertex-stats pass + one tiny aggregate replace the separate
-    // stats scan, seeded-node materialization, seed count and
-    // src/dst-mismatch probe (4 sequential jobs -> 2); the seed flag
-    // is a pure function of the node id, so |seeds| rides the same
-    // aggregate
-    val vstats = vertexStats(ew0, checkpointDir)
-    val g = vstats.agg(max(col("mw")).as("mw"), sum(col("cnt")).as("m"),
-      max(when(col("dst").isNull, 1).otherwise(0)).as("zi"),
-      max(when(col("src").isNull, 1).otherwise(0)).as("sk"),
-      sum(when(col("src").isNotNull && isSeed(col("src")).cast("boolean"), 1L)
-        .otherwise(0L)).as("nseeds")).head()
-    val maxW = Option(g.get(0)).fold(0L)(_.asInstanceOf[Long])
-    val m = Option(g.get(1)).fold(0L)(_.asInstanceOf[Long])
-    require(m > 0, "personalizedPagerank: empty edge set")
-    require(maxW <= Long.MaxValue / Scale,
-      s"personalizedPagerank: edge weight $maxW would overflow rank*w at scale $Scale")
-    val parts = math.max(1L,
-      math.min(ew0.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt
-    val ew =
-      if (prePartitionEdges) {
-        val p = ew0.repartition(parts, col("src")).persist()
-        p.count()
-        p
-      } else ew0.coalesce(parts)
-    // seed flag rides on the node relation — ONE boolean column
-    // projected off the materialized vertex stats, no separate seed
-    // join anywhere in the loop and no extra materialization job
-    val seeded = vstats.filter(col("src").isNotNull)
-      .select(col("src").as("v"), isSeed(col("src")).cast("boolean").as("s"))
-    val nSeeds = Option(g.get(4)).fold(0L)(_.asInstanceOf[Long])
-    require(nSeeds > 0, "personalizedPagerank: seed predicate matched no node")
-    val base = (3L * Scale) / (20L * nSeeds)
-    // fast path (the pagerank pattern, measured on the q130 graph):
-    // when src and dst sets coincide the per-round seeded left join
-    // drops out — the seed flag is a pure function of the node id, so
-    // it evaluates dst-side ON the edge relation with no join and no
-    // extra shuffle (preserving a prePartitionEdges layout), and each
-    // round is ONE join + ONE agg ([[pprFastStep]]). One fused probe
-    // job decides ([[srcDstMismatch]]); asymmetric graphs keep the
-    // seeded-join path.
-    val fast = !(g.getInt(2) == 1 || g.getInt(3) == 1)
-    val ewS = if (fast)
-      ew.withColumn("sd", isSeed(col("dst")).cast("boolean")) else ew
-    var rank = seeded.select(col("v"),
-      when(col("s"), lit(Scale / nSeeds)).otherwise(lit(0L)).as("rank"))
-    for (k <- 1 to iters) {
-      val stepped =
-        if (fast) pprFastStep(ewS, rank, base)
-        else pprStep(ew, seeded, rank, base)
-      // seeded and the contrib chain both bottom out in materialized
-      // relations, so lineage accumulates safely between every-5th
-      // checkpoints — the pagerank fast-path pattern
-      rank =
-        if (k % 5 == 0 || k == iters)
-          PartitionUtil.materialize(stepped, checkpointDir)
-        else stepped
-    }
-    if (prePartitionEdges) ew.unpersist(false)
-    rank
   }
 
   /** DuckDB oracle for [[personalizedPagerank]] over the supplier
@@ -564,9 +534,8 @@ object Graph {
     // driver fast path (see the header note; quadratic cap — wedge
     // work): per edge, every common neighbour is one triangle corner
     // credit, so each corner collects exactly one credit per triangle
-    if (e.count() <= maxDriverEdgesQuad(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e.as[(Long, Long)].collect()
+    PartitionUtil.venue[(Long, Long)](e, e.count(), Quadratic,
+        fromDDL("v BIGINT, n_triangles BIGINT NOT NULL")) { ewArr =>
       val nbr = new java.util.HashMap[Long, java.util.HashSet[java.lang.Long]]()
       def ns(v: Long) = {
         var s = nbr.get(v)
@@ -581,39 +550,40 @@ object Graph {
         small.forEach { c => if (large.contains(c))
           tri.merge(c.longValue(), 1L, (x, y) => x + y) }
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      tri.forEach { (v, n) => out += Array(v, n) }
-      return longDf(edges.sparkSession, Seq("v", "n_triangles"), out.toSeq)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      tri.forEach { (v, n) => out += ((v, n)) }
+      out
+    } {
+      val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
+        .groupBy(col("v")).agg(count(lit(1)).as("d"))
+      // orient each edge low→high by (degree, id); keep the head's
+      // (degree, id) key so the wedge join can order its two spokes
+      // without a third degree lookup
+      val dir = e
+        .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
+        .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
+        .select(
+          when(col("da") < col("db") ||
+               (col("da") === col("db") && col("a") < col("b")),
+            struct(col("a").as("u"), col("b").as("x"), col("db").as("dx")))
+          .otherwise(
+            struct(col("b").as("u"), col("a").as("x"), col("da").as("dx")))
+          .as("s"))
+        .select(col("s.u").as("u"), col("s.x").as("x"), col("s.dx").as("dx"))
+        .localCheckpoint()
+      // wedges u→v, u→w with v strictly before w in (degree, id) order:
+      // each unordered spoke pair counted once, and the closing edge
+      // {v, w} — if present — is oriented v→w by construction
+      val wedges = dir.select(col("u"), col("x").as("v"), col("dx").as("dv"))
+        .join(dir.select(col("u"), col("x").as("w"), col("dx").as("dw")), Seq("u"))
+        .filter(col("dv") < col("dw") ||
+                (col("dv") === col("dw") && col("v") < col("w")))
+      val tris = wedges
+        .join(dir.select(col("x").as("w"), col("u").as("v")),
+          Seq("v", "w"), "left_semi")
+      tris.select(explode(array(col("u"), col("v"), col("w"))).as("v"))
+        .groupBy(col("v")).agg(count(lit(1)).as("n_triangles"))
     }
-    val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    // orient each edge low→high by (degree, id); keep the head's
-    // (degree, id) key so the wedge join can order its two spokes
-    // without a third degree lookup
-    val dir = e
-      .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
-      .select(
-        when(col("da") < col("db") ||
-             (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("u"), col("b").as("x"), col("db").as("dx")))
-        .otherwise(
-          struct(col("b").as("u"), col("a").as("x"), col("da").as("dx")))
-        .as("s"))
-      .select(col("s.u").as("u"), col("s.x").as("x"), col("s.dx").as("dx"))
-      .localCheckpoint()
-    // wedges u→v, u→w with v strictly before w in (degree, id) order:
-    // each unordered spoke pair counted once, and the closing edge
-    // {v, w} — if present — is oriented v→w by construction
-    val wedges = dir.select(col("u"), col("x").as("v"), col("dx").as("dv"))
-      .join(dir.select(col("u"), col("x").as("w"), col("dx").as("dw")), Seq("u"))
-      .filter(col("dv") < col("dw") ||
-              (col("dv") === col("dw") && col("v") < col("w")))
-    val tris = wedges
-      .join(dir.select(col("x").as("w"), col("u").as("v")),
-        Seq("v", "w"), "left_semi")
-    tris.select(explode(array(col("u"), col("v"), col("w"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("n_triangles"))
   }
 
   /** Diagnostic: the wedge-join volume Σ_v C(outdeg(v), 2) the
@@ -671,9 +641,8 @@ object Graph {
     val m = e0.count()
     // driver fast path (see the header note; the quadratic cap — this
     // is Σ|ball| work): multi-source BFS, first distance wins
-    if (m <= maxDriverEdgesQuad(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e0.as[(Long, Long)].collect()
+    PartitionUtil.venue[(Long, Long)](e0, m, Quadratic,
+        fromDDL("v BIGINT, harmonic_q6 BIGINT, n_reached BIGINT NOT NULL")) { ewArr =>
       val adj = ewArr.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       val hsum = new java.util.HashMap[Long, Long]()
       val nreach = new java.util.HashMap[Long, Long]()
@@ -691,37 +660,34 @@ object Graph {
           frontier = next
         }
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      hsum.forEach { (v, h) => out += Array(v, h, nreach.get(v)) }
-      return longDf(edges.sparkSession, Seq("v", "harmonic_q6", "n_reached"),
-        out.toSeq)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+      hsum.forEach { (v, h) => out += ((v, h, nreach.get(v))) }
+      out
+    } {
+      val e = e0.coalesce(loopParts(e0, m))
+      // d(v, v) = 0 seeds; excluded from the sum but needed so round 1
+      // doesn't re-reach the source itself. Only each round's FRONTIER
+      // materializes — the accumulated reached set stays a lazy union of
+      // the already-materialized per-round relations (each round's new
+      // pairs are the only new state, so checkpoint I/O is O(Σ|ball|)
+      // total, not O(R·Σ|ball|); the anti join probes the union, which
+      // scans R materialized block sets — R = radius, a small constant).
+      val frontiers = scala.collection.mutable.ArrayBuffer(
+        PartitionUtil.materialize(
+          e.select(col("src").as("s")).distinct()
+            .select(col("s"), col("s").as("v"), lit(0L).as("d")),
+          checkpointDir))
+      for (k <- 1 to radius) {
+        val all = frontiers.reduce(_ union _)
+        val next = PartitionUtil.materialize(
+          harmonicHop(e, frontiers.last, all, k), checkpointDir)
+        frontiers += next
+      }
+      frontiers.reduce(_ union _).filter(col("d") > 0)
+        .groupBy(col("v"))
+        .agg(sum(expr("1000000 div d")).as("harmonic_q6"),
+             count(lit(1)).as("n_reached"))
     }
-    // size per-hop jobs to the graph (the pagerank pattern): a small
-    // graph otherwise pays `radius` rounds of full-width task launches
-    val e = e0.coalesce(math.max(1L, math.min(
-      e0.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt)
-    // d(v, v) = 0 seeds; excluded from the sum but needed so round 1
-    // doesn't re-reach the source itself. Only each round's FRONTIER
-    // materializes — the accumulated reached set stays a lazy union of
-    // the already-materialized per-round relations (each round's new
-    // pairs are the only new state, so checkpoint I/O is O(Σ|ball|)
-    // total, not O(R·Σ|ball|); the anti join probes the union, which
-    // scans R materialized block sets — R = radius, a small constant).
-    val frontiers = scala.collection.mutable.ArrayBuffer(
-      PartitionUtil.materialize(
-        e.select(col("src").as("s")).distinct()
-          .select(col("s"), col("s").as("v"), lit(0L).as("d")),
-        checkpointDir))
-    for (k <- 1 to radius) {
-      val all = frontiers.reduce(_ union _)
-      val next = PartitionUtil.materialize(
-        harmonicHop(e, frontiers.last, all, k), checkpointDir)
-      frontiers += next
-    }
-    frontiers.reduce(_ union _).filter(col("d") > 0)
-      .groupBy(col("v"))
-      .agg(sum(expr("1000000 div d")).as("harmonic_q6"),
-           count(lit(1)).as("n_reached"))
   }
 
   /** ONE BFS hop of [[harmonicCentrality]], un-materialized (exposed
@@ -803,10 +769,10 @@ object Graph {
     val m = eM.count()
     // driver fast path (see the header note; quadratic cap — per-round
     // work is O(|E|·k) sketch merges): the identical bottom-k sketch
-    // recurrence with the identical content hash and integer estimator
-    if (m <= maxDriverEdgesQuad(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = eM.as[(Long, Long)].collect() // includes the self-loops
+    // recurrence over the edges and self-loops, with the identical
+    // content hash and integer estimator
+    val out = fromDDL("v BIGINT, r BIGINT NOT NULL, k_used BIGINT, kth BIGINT, nb_est BIGINT")
+    PartitionUtil.venue[(Long, Long)](eM, m, Quadratic, out) { ewArr =>
       val adj = ewArr.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       var hb = adj.keysIterator.map { v =>
         v -> Array(graft.functions.ContentHashUtil.hash(
@@ -820,38 +786,36 @@ object Graph {
       def est(sk: Array[Long]): Long =
         if (sk.length < k) sk.length.toLong
         else (BigInt(k - 1) * BigInt(4611686018427387904L) / BigInt(sk.last)).toLong
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long)]
       for (r <- 1 to radius) {
         hb = adj.map { case (v, ds) =>
           v -> bottomK(ds.flatMap(d => hb.getOrElse(d, Array.empty[Long])))
         }
         hb.foreach { case (v, sk) =>
-          out += Array(v, r.toLong, sk.length.toLong, sk.last, est(sk))
+          out += ((v, r.toLong, sk.length.toLong, sk.last, est(sk)))
         }
       }
-      return longDf(edges.sparkSession,
-        Seq("v", "r", "k_used", "kth", "nb_est"), out.toSeq)
+      out
+    } {
+      val e = eM.coalesce(loopParts(eM, m))
+      var hb = PartitionUtil.materialize(
+        nodes.select(col("v"), array(h62).as("sk")), checkpointDir)
+      val est =
+        when(size(col("sk")) < k, size(col("sk")).cast("long"))
+          .otherwise(expr(
+            s"CAST((CAST(${k - 1} AS DECIMAL(38,0)) * CAST(4611686018427387904 AS DECIMAL(38,0)))" +
+              " div CAST(element_at(sk, -1) AS DECIMAL(38,0)) AS BIGINT)"))
+      val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      for (r <- 1 to radius) {
+        hb = PartitionUtil.materialize(
+          hyperballRound(e, hb, merge), checkpointDir)
+        rounds += hb.select(col("v"), lit(r.toLong).as("r"),
+          size(col("sk")).cast("long").as("k_used"),
+          element_at(col("sk"), -1).as("kth"),
+          est.as("nb_est"))
+      }
+      rounds.reduce(_ unionByName _)
     }
-    // size per-round jobs to the graph (the pagerank pattern)
-    val e = eM.coalesce(math.max(1L, math.min(
-      eM.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt)
-    var hb = PartitionUtil.materialize(
-      nodes.select(col("v"), array(h62).as("sk")), checkpointDir)
-    val est =
-      when(size(col("sk")) < k, size(col("sk")).cast("long"))
-        .otherwise(expr(
-          s"CAST((CAST(${k - 1} AS DECIMAL(38,0)) * CAST(4611686018427387904 AS DECIMAL(38,0)))" +
-            " div CAST(element_at(sk, -1) AS DECIMAL(38,0)) AS BIGINT)"))
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (r <- 1 to radius) {
-      hb = PartitionUtil.materialize(
-        hyperballRound(e, hb, merge), checkpointDir)
-      rounds += hb.select(col("v"), lit(r.toLong).as("r"),
-        size(col("sk")).cast("long").as("k_used"),
-        element_at(col("sk"), -1).as("kth"),
-        est.as("nb_est"))
-    }
-    rounds.reduce(_ unionByName _)
   }
 
   /** ONE HyperBall round, un-materialized (exposed for plan audits):
@@ -930,39 +894,36 @@ object Graph {
     val m = e0.count()
     // driver fast path (see the header note): min-plus relaxation over
     // the collected edges — integer min is reduction-order-free
-    if (m <= maxDriverEdges(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e0.as[(Long, Long, Long)].collect()
+    PartitionUtil.venue[(Long, Long, Long)](e0, m, Linear, fromDDL("v BIGINT, cost BIGINT")) { ew =>
       val seeds = e0.select(col("src")).distinct()
-        .filter(isSeed(col("src"))).as[Long].collect()
+        .filter(isSeed(col("src"))).as(Encoders.scalaLong).collect()
       require(seeds.nonEmpty, "cheapestPaths: seed predicate matched no node")
       var dist = new java.util.HashMap[Long, Long](seeds.length * 2)
       seeds.foreach(v => dist.put(v, 0L))
       for (_ <- 1 to hops) {
         val next = new java.util.HashMap[Long, Long](dist.size() * 2)
         dist.forEach { (v, c) => next.put(v, c) }
-        ewArr.foreach { case (src, dst, cost) =>
+        ew.foreach { case (src, dst, cost) =>
           if (dist.containsKey(src))
             next.merge(dst, dist.get(src) + cost, (a, b) => math.min(a, b))
         }
         dist = next
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      dist.forEach { (v, c) => out += Array(v, c) }
-      return longDf(edges.sparkSession, Seq("v", "cost"), out.toSeq)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      dist.forEach { (v, c) => out += ((v, c)) }
+      out
+    } {
+      val e = e0.coalesce(loopParts(e0, m))
+      val seeds = e.select(col("src").as("v")).distinct().filter(isSeed(col("v")))
+      var dist = PartitionUtil.materialize(
+        seeds.select(col("v"), lit(0L).as("cost")), checkpointDir)
+      require(dist.limit(1).count() > 0,
+        "cheapestPaths: seed predicate matched no node")
+      for (_ <- 1 to hops) {
+        dist = PartitionUtil.materialize(relaxRound(e, dist), checkpointDir)
+      }
+      dist
     }
-    // size per-round jobs to the graph (the pagerank pattern)
-    val e = e0.coalesce(math.max(1L, math.min(
-      e0.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt)
-    val seeds = e.select(col("src").as("v")).distinct().filter(isSeed(col("v")))
-    var dist = PartitionUtil.materialize(
-      seeds.select(col("v"), lit(0L).as("cost")), checkpointDir)
-    require(dist.limit(1).count() > 0,
-      "cheapestPaths: seed predicate matched no node")
-    for (_ <- 1 to hops) {
-      dist = PartitionUtil.materialize(relaxRound(e, dist), checkpointDir)
-    }
-    dist
   }
 
   /** ONE Bellman-Ford relax round, un-materialized (exposed for plan
@@ -1027,8 +988,6 @@ object Graph {
           greatest(col("src"), col("dst")).as("b"))
         .filter(col("a") =!= col("b")).distinct(),
       checkpointDir)
-    var converged = false
-    var r = 0
     // carry the surviving-edge count across rounds: the materialize is
     // eager (its job already counts nothing), so ONE count() action per
     // peel round suffices — the previous round's count is a variable,
@@ -1037,9 +996,9 @@ object Graph {
     // driver fast path (see the header note): iterative peeling over
     // the collected canonical edge set — peeling is confluent and the
     // round/convergence accounting mirrors the distributed loop exactly
-    if (mPrev <= maxDriverEdges(edges)) {
-      import edges.sparkSession.implicits._
-      var es = e.as[(Long, Long)].collect().toSeq
+    PartitionUtil.venue[(Long, Long)](e, mPrev, Linear,
+        fromDDL("v BIGINT, core_deg BIGINT NOT NULL")) { ewArr =>
+      var es = ewArr.toSeq
       var prev = es.length
       var conv = false
       var rounds = 0
@@ -1054,23 +1013,23 @@ object Graph {
       }
       require(conv,
         s"kCore: did not converge within $maxRounds peel rounds — raise maxRounds")
-      val coreDeg = (es.map(_._1) ++ es.map(_._2)).groupBy(identity)
-        .view.mapValues(_.length.toLong).toMap
-      return longDf(edges.sparkSession, Seq("v", "core_deg"),
-        coreDeg.toSeq.map { case (v, d) => Array(v, d) })
+      (es.map(_._1) ++ es.map(_._2)).groupBy(identity).view.mapValues(_.length.toLong).toSeq
+    } {
+      var converged = false
+      var r = 0
+      while (!converged && r < maxRounds) {
+        val pruned = PartitionUtil.materialize(peelRound(e, k), checkpointDir)
+        val m = pruned.count()
+        converged = m == mPrev
+        mPrev = m
+        e = pruned
+        r += 1
+      }
+      require(converged,
+        s"kCore: did not converge within $maxRounds peel rounds — raise maxRounds")
+      e.select(col("a").as("v")).union(e.select(col("b").as("v")))
+        .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
     }
-    while (!converged && r < maxRounds) {
-      val pruned = PartitionUtil.materialize(peelRound(e, k), checkpointDir)
-      val m = pruned.count()
-      converged = m == mPrev
-      mPrev = m
-      e = pruned
-      r += 1
-    }
-    require(converged,
-      s"kCore: did not converge within $maxRounds peel rounds — raise maxRounds")
-    e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
   }
 
   /** ONE k-core peel round, un-materialized (exposed for plan
@@ -1158,67 +1117,70 @@ object Graph {
     val e0 = PartitionUtil.materialize(
       edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
       checkpointDir)
-    // size per-round jobs to the graph (the pagerank pattern): narrow
-    // coalesce to ~2M edges/partition, capped at inherited parallelism
     val m = e0.count()
     // driver fast path (see the header note): synchronous LPA rounds
     // over the collected edges — argmax by (weight desc, label asc),
     // the same total order as the distributed struct-min
-    if (m <= maxDriverEdges(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e0.as[(Long, Long, Long)].collect()
-      val nodes = ewArr.map(_._1).distinct
-      var labels = new java.util.HashMap[Long, Long](nodes.length * 2)
-      nodes.foreach(v => labels.put(v, v))
+    PartitionUtil.venue[(Long, Long, Long)](e0, m, Linear, fromDDL("v BIGINT, label BIGINT")) { ewArr =>
+      // nodes and labels are positions in the sorted node array (< 2^31,
+      // as |V| <= |E| <= cap), so one packed Long keys a (src, label)
+      // pair and position order is label order for the tie-break
+      val nodes = ewArr.map(_._1).distinct.sorted
+      def pos(v: Long) = java.util.Arrays.binarySearch(nodes, v)
+      val srcPos = ewArr.map(e => pos(e._1))
+      val dstPos = ewArr.map(e => pos(e._2)) // negative: not a node
+      var labels = Array.range(0, nodes.length) // -1: dropped out
       for (_ <- 1 to iters) {
         // wt(src, label) = Σ w over edges whose dst currently holds label
-        val wt = new java.util.HashMap[(Long, Long), Long](ewArr.length / 2)
-        ewArr.foreach { case (src, dst, w) =>
-          if (labels.containsKey(dst))
-            wt.merge((src, labels.get(dst)), w, (a, b) => a + b)
+        val wt = new java.util.HashMap[Long, Long](ewArr.length / 2)
+        var i = 0
+        while (i < ewArr.length) {
+          val d = dstPos(i)
+          if (d >= 0 && labels(d) >= 0)
+            wt.merge(srcPos(i).toLong << 32 | labels(d), ewArr(i)._3, (a, b) => a + b)
+          i += 1
         }
-        val next = new java.util.HashMap[Long, Long](nodes.length * 2)
-        wt.forEach { (k, sum) =>
-          val (src, label) = k
-          if (next.containsKey(src)) {
-            val cur = next.get(src)
-            val curW = wt.get((src, cur))
-            if (sum > curW || (sum == curW && label < cur)) next.put(src, label)
-          } else next.put(src, label)
+        val next = Array.fill(nodes.length)(-1)
+        val best = new Array[Long](nodes.length)
+        wt.forEach { (key, sum) =>
+          val src = (key >>> 32).toInt
+          val label = key.toInt
+          if (next(src) < 0 || sum > best(src) || (sum == best(src) && label < next(src))) {
+            next(src) = label
+            best(src) = sum
+          }
         }
         labels = next
       }
       // the distributed round is an INNER join on dst, so a node whose
       // neighbors all lost their labels drops out — emit exactly the
       // final relation's keys, not the initial node set
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      labels.forEach { (v, l) => out += Array(v, l) }
-      return longDf(edges.sparkSession, Seq("v", "label"), out.toSeq)
+      nodes.indices.filter(labels(_) >= 0).map(i => (nodes(i), nodes(labels(i))))
+    } {
+      val parts = loopParts(e0, m)
+      // persist (not checkpoint): InMemoryRelation keeps the hash
+      // partitioning on dst, so each round's label join shuffles only
+      // the label vector — see the pagerank note
+      val e =
+        if (prePartitionEdges) {
+          val p = e0.repartition(parts, col("dst")).persist()
+          p.count()
+          p
+        } else e0.coalesce(parts)
+      var labels = PartitionUtil.materialize(
+        e.select(col("src").as("v")).distinct()
+          .select(col("v"), col("v").as("label")),
+        checkpointDir)
+      for (k <- 1 to iters) {
+        val stepped = lpaRound(e, labels)
+        labels =
+          if (k % 5 == 0 || k == iters)
+            PartitionUtil.materialize(stepped, checkpointDir)
+          else stepped
+      }
+      if (prePartitionEdges) e.unpersist(false) // labels are materialized
+      labels
     }
-    val parts = math.max(1L,
-      math.min(e0.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt
-    // persist (not checkpoint): InMemoryRelation keeps the hash
-    // partitioning on dst, so each round's label join shuffles only
-    // the label vector — see the pagerank note
-    val e =
-      if (prePartitionEdges) {
-        val p = e0.repartition(parts, col("dst")).persist()
-        p.count()
-        p
-      } else e0.coalesce(parts)
-    var labels = PartitionUtil.materialize(
-      e.select(col("src").as("v")).distinct()
-        .select(col("v"), col("v").as("label")),
-      checkpointDir)
-    for (k <- 1 to iters) {
-      val stepped = lpaRound(e, labels)
-      labels =
-        if (k % 5 == 0 || k == iters)
-          PartitionUtil.materialize(stepped, checkpointDir)
-        else stepped
-    }
-    if (prePartitionEdges) e.unpersist(false) // labels are materialized
-    labels
   }
 
   /** ONE synchronous LPA round, un-materialized — join the label
@@ -1432,12 +1394,10 @@ object Graph {
     // driver fast path (see the header note; quadratic cap — wedge
     // work): same capped wedge generation, integer indices, and
     // (cn desc, ra desc, a, b) total order
-    if (e.count() <= maxDriverEdgesQuad(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e.as[(Long, Long)].collect()
-      val edgeSet = ewArr.map { case (a, b) => (a, b) }.toSet
-      val adjM = (ewArr.map { case (a, b) => (a, b) } ++
-        ewArr.map { case (a, b) => (b, a) })
+    val out = fromDDL("a BIGINT, b BIGINT, cn BIGINT NOT NULL, jaccard_q6 BIGINT, ra_q6 BIGINT")
+    PartitionUtil.venue[(Long, Long)](e, e.count(), Quadratic, out) { ewArr =>
+      val edgeSet = ewArr.toSet
+      val adjM = (ewArr ++ ewArr.map { case (a, b) => (b, a) })
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       val deg = adjM.view.mapValues(_.length.toLong).toMap
       val cn = new java.util.HashMap[(Long, Long), Long]()
@@ -1460,38 +1420,36 @@ object Graph {
           }
         }
       }
-      val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long)]
       cn.forEach { (key, c) =>
         val (a, b) = key
         if (!edgeSet.contains(key))
-          rows += Array(a, b, c,
-            1000000L * c / (deg(a) + deg(b) - c), ra.get(key))
+          rows += ((a, b, c, 1000000L * c / (deg(a) + deg(b) - c), ra.get(key)))
       }
-      val top = rows.sortBy(r => (-r(2), -r(4), r(0), r(1))).take(topK)
-      return longDf(edges.sparkSession,
-        Seq("a", "b", "cn", "jaccard_q6", "ra_q6"), top.toSeq)
+      rows.sortBy(r => (-r._3, -r._5, r._1, r._2)).take(topK)
+    } {
+      val adj = e.select(col("a").as("u"), col("b").as("z"))
+        .union(e.select(col("b").as("u"), col("a").as("z")))
+      val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("d"))
+      // neighbours grouped by middle, hubs above the cap dropped loudly
+      // at generation time (contract knob, mirrored in the oracle)
+      val nbm = adj.select(col("u").as("m"), col("z").as("n"))
+        .join(deg.select(col("u").as("m"), col("d").as("dm")), Seq("m"))
+        .filter(col("dm") <= maxMiddleDegree)
+      val wedges = nbm.select(col("m"), col("n").as("a"), col("dm"))
+        .join(nbm.select(col("m"), col("n").as("b")), Seq("m"))
+        .filter(col("a") < col("b"))
+      val cand = wedges.groupBy(col("a"), col("b"))
+        .agg(count(lit(1)).as("cn"), sum(expr("1000000 div dm")).as("ra_q6"))
+        .join(e, Seq("a", "b"), "left_anti") // score only MISSING links
+      cand
+        .join(deg.select(col("u").as("a"), col("d").as("da")), Seq("a"))
+        .join(deg.select(col("u").as("b"), col("d").as("db")), Seq("b"))
+        .select(col("a"), col("b"), col("cn"),
+          expr("1000000 * cn div (da + db - cn)").as("jaccard_q6"), col("ra_q6"))
+        .orderBy(col("cn").desc, col("ra_q6").desc, col("a"), col("b"))
+        .limit(topK)
     }
-    val adj = e.select(col("a").as("u"), col("b").as("z"))
-      .union(e.select(col("b").as("u"), col("a").as("z")))
-    val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("d"))
-    // neighbours grouped by middle, hubs above the cap dropped loudly
-    // at generation time (contract knob, mirrored in the oracle)
-    val nbm = adj.select(col("u").as("m"), col("z").as("n"))
-      .join(deg.select(col("u").as("m"), col("d").as("dm")), Seq("m"))
-      .filter(col("dm") <= maxMiddleDegree)
-    val wedges = nbm.select(col("m"), col("n").as("a"), col("dm"))
-      .join(nbm.select(col("m"), col("n").as("b")), Seq("m"))
-      .filter(col("a") < col("b"))
-    val cand = wedges.groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("cn"), sum(expr("1000000 div dm")).as("ra_q6"))
-      .join(e, Seq("a", "b"), "left_anti") // score only MISSING links
-    cand
-      .join(deg.select(col("u").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("u").as("b"), col("d").as("db")), Seq("b"))
-      .select(col("a"), col("b"), col("cn"),
-        expr("1000000 * cn div (da + db - cn)").as("jaccard_q6"), col("ra_q6"))
-      .orderBy(col("cn").desc, col("ra_q6").desc, col("a"), col("b"))
-      .limit(topK)
   }
 
   /** Diagnostic for [[linkPrediction]]'s cap: the wedge volume

@@ -1,10 +1,46 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 object PartitionUtil {
+  /** The session conf key and default of one driver fast path's row cap. */
+  final case class DriverCap(key: String, default: Long)
+
+  /** The one venue gate for the iterative operators' driver fast
+    * paths. `input` is already materialized and `rows` is its row
+    * count. When `0 < rows <= cap` the rows are collected and `driver`
+    * computes the result on the driver; otherwise (cap 0 always, and
+    * any empty input) `distributed` runs. Both venues return the
+    * operator's one declared `out` schema: the driver rows are built
+    * into it, and a distributed result of any other schema is
+    * projected onto it with `Dataset.to`. `to` keeps a non-null column
+    * non-null, so a column `out` declares nullable is widened by a
+    * union with an empty relation of `out`, which the optimizer
+    * removes. A column whose distributed nullability depends on the
+    * input must be declared nullable: `to` rejects narrowing it. A
+    * distributed result already in `out` is returned as it is, so
+    * unpersisting it still reaches its cache entry. */
+  def venue[T <: Product : TypeTag](input: DataFrame, rows: Long, cap: DriverCap,
+                                   out: StructType)
+                                  (driver: Array[T] => Iterable[Product])
+                                  (distributed: => DataFrame): DataFrame = {
+    val spark = input.sparkSession
+    def local(rs: Iterable[Product]): DataFrame =
+      spark.createDataFrame(rs.map(Row.fromTuple).toSeq.asJava, out)
+    if (rows > 0 && rows <= spark.conf.get(cap.key, cap.default.toString).toLong)
+      local(driver(input.as[T](Encoders.product[T]).collect()))
+    else {
+      val d = distributed
+      if (d.schema == out) d else local(Nil).union(d.to(out))
+    }
+  }
+
   /** Ensure a DataFrame has at least the cluster's default parallelism
     * in partitions before CPU-heavy per-row / all-pairs work.
     *

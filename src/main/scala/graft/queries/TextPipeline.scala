@@ -823,8 +823,9 @@ object TextPipeline {
     // broadcasts — the standard eval-leak check before training --------
     ("q75_decontam",
       (s, dir) => {
-        val sh = t(s, dir, "documents")
-          .select(col("doc_id"), explode(Dedup.shingles(col("text"), 5)).as("shingle"))
+        val docs = t(s, dir, "documents")
+        val sh = docs
+          .select(col("doc_id"), explode(Dedup.shingles(docs, col("text"), 5)).as("shingle"))
         val bench = sh.filter(col("doc_id") < 10).select(col("shingle")).distinct()
         sh.filter(col("doc_id") >= 10)
           .join(broadcast(bench), Seq("shingle"))

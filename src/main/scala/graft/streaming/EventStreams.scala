@@ -1085,7 +1085,7 @@ object EventStreams {
     import docs.sparkSession.implicits._
     val spark = docs.sparkSession
     val benchSet = bench
-      .select(explode(graft.pipeline.Dedup.shingles(col("text"), n)).as("shingle"))
+      .select(explode(graft.pipeline.Dedup.shingles(bench, col("text"), n)).as("shingle"))
       .distinct().as[String].collect().toSet
     val bloom = org.apache.spark.util.sketch.BloomFilter
       .create(math.max(benchSet.size.toLong, 1L), fpp)

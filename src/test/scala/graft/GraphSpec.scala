@@ -207,46 +207,58 @@ class GraphSpec extends AnyFunSuite with Matchers {
     // a source whose only out-edge has w = 0 (its rank contributes
     // nothing on either path)
     val rng = new scala.util.Random(20260819L)
-    val edges = ((1 to 400).map { _ =>
+    val random = (1 to 400).map { _ =>
       (rng.nextInt(40).toLong, rng.nextInt(40).toLong, (rng.nextInt(9) + 1).toLong)
-    }.distinct.filter(e => e._1 != e._2) :+ ((40L, 3L, 0L))).toDF("src", "dst", "w")
-      .localCheckpoint()
-    // symmetric, so the distributed rank loops take their fast path;
-    // 4 <-> 5 carry w = 0 both ways, so 4 and 5 receive only the null
-    // contributions of zero out-weight sources
-    val symmetric = Seq((1L, 2L, 3L), (2L, 1L, 3L), (2L, 3L, 1L), (3L, 2L, 1L),
-      (4L, 5L, 0L), (5L, 4L, 0L)).toDF("src", "dst", "w")
-    def rows(df: org.apache.spark.sql.DataFrame): List[Seq[Any]] =
-      df.collect().map(_.toSeq).toList.sortBy(_.mkString(","))
-    def all(): Map[String, List[Seq[Any]]] = Map(
-      "pagerank" -> rows(Graph.pagerank(edges, iters = 4)),
-      "ppr" -> rows(Graph.personalizedPagerank(edges,
-        v => pmod(v, lit(5)) === 0, iters = 4)),
-      "pagerank-symmetric" -> rows(Graph.pagerank(symmetric, iters = 4)),
-      "ppr-symmetric" -> rows(Graph.personalizedPagerank(symmetric,
-        v => pmod(v, lit(2)) === 0, iters = 4)),
-      "lpa" -> rows(Graph.labelPropagation(edges, iters = 3)),
-      "harmonic" -> rows(Graph.harmonicCentrality(edges, radius = 2)),
-      "neighborhood" -> rows(Graph.neighborhoodFunction(edges, radius = 2, k = 8)),
-      "cheapest" -> rows(Graph.cheapestPaths(
-        edges.withColumn("cost", expr("1000000 div greatest(w, 1)")),
-        v => pmod(v, lit(5)) === 0, hops = 3)),
-      "kcore" -> rows(Graph.kCore(edges, k = 3, maxRounds = 20)),
-      "triangles" -> rows(Graph.triangleCounts(edges)),
-      "linkpred" -> rows(Graph.linkPrediction(edges, maxMiddleDegree = 1000L, topK = 50)),
-      "modularity" -> rows(Graph.communityModularity(edges, iters = 3)))
-    val driver = all() // caps at defaults: every operator takes the driver path
-    spark.conf.set("graft.graph.maxDriverEdges", "0")
-    spark.conf.set("graft.graph.maxDriverEdgesQuadratic", "0")
-    try {
-      val dist = all() // caps 0: every operator runs the distributed loop
-      driver.keys.foreach { op =>
-        withClue(s"$op driver-vs-distributed:") { dist(op) shouldBe driver(op) }
-      }
-    } finally {
-      spark.conf.unset("graft.graph.maxDriverEdges")
-      spark.conf.unset("graft.graph.maxDriverEdgesQuadratic")
+    }.distinct.filter(e => e._1 != e._2) :+ ((40L, 3L, 0L))
+    val parquetDir = java.nio.file.Files.createTempDirectory("graph-venues").toString + "/e"
+    random.toDF("src", "dst", "w").write.parquet(parquetDir)
+    // every input is a table the operators accept; each one has a case
+    // where the two venues could part: the driver kernels see Scala
+    // tuples, the distributed loops see nullable columns and joins
+    val inputs: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "random" -> random.toDF("src", "dst", "w").localCheckpoint(),
+      // symmetric, so the distributed rank loops take their fast path;
+      // 4 <-> 5 carry w = 0 both ways, so 4 and 5 receive only the null
+      // contributions of zero out-weight sources
+      "symmetric" -> Seq((1L, 2L, 3L), (2L, 1L, 3L), (2L, 3L, 1L), (3L, 2L, 1L),
+        (4L, 5L, 0L), (5L, 4L, 0L)).toDF("src", "dst", "w"),
+      "zero-weights" -> Seq((1L, 2L, 0L), (2L, 1L, 0L), (2L, 3L, 0L), (3L, 1L, 5L),
+        (1L, 3L, 0L), (3L, 4L, 0L), (4L, 3L, 2L)).toDF("src", "dst", "w"),
+      "self-loops" -> Seq((1L, 1L, 2L), (1L, 2L, 1L), (2L, 1L, 1L), (2L, 2L, 3L),
+        (2L, 3L, 1L), (3L, 1L, 1L), (3L, 3L, 1L), (3L, 4L, 2L), (4L, 2L, 1L)).toDF("src", "dst", "w"),
+      "duplicates" -> Seq((1L, 2L, 1L), (1L, 2L, 1L), (2L, 1L, 2L), (2L, 3L, 1L), (2L, 3L, 1L),
+        (3L, 1L, 1L), (3L, 2L, 4L), (3L, 4L, 1L), (4L, 1L, 1L), (4L, 1L, 1L)).toDF("src", "dst", "w"),
+      "sinks" -> Seq((1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 1L), (2L, 4L, 2L), (3L, 5L, 1L),
+        (6L, 1L, 1L), (3L, 6L, 3L), (6L, 2L, 1L)).toDF("src", "dst", "w"),
+      "empty" -> Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w"),
+      "ids >= 2^31" -> random.map { case (a, b, w) => (a + 3000000000L, b + 3000000000L, w) }
+        .toDF("src", "dst", "w"),
+      "parquet" -> spark.read.parquet(parquetDir))
+    def ops(e: org.apache.spark.sql.DataFrame): Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pagerank" -> (() => Graph.pagerank(e, iters = 4)),
+      "ppr" -> (() => Graph.personalizedPagerank(e, v => pmod(v, lit(3)) === 0, iters = 4)),
+      "lpa" -> (() => Graph.labelPropagation(e, iters = 3)),
+      "harmonic" -> (() => Graph.harmonicCentrality(e, radius = 2)),
+      "neighborhood" -> (() => Graph.neighborhoodFunction(e, radius = 2, k = 8)),
+      "cheapest" -> (() => Graph.cheapestPaths(
+        e.withColumn("cost", expr("1000000 div greatest(w, 1)")),
+        v => pmod(v, lit(3)) === 0, hops = 3)),
+      "kcore" -> (() => Graph.kCore(e, k = 3, maxRounds = 20)),
+      "triangles" -> (() => Graph.triangleCounts(e)),
+      "linkpred" -> (() => Graph.linkPrediction(e, maxMiddleDegree = 1000L, topK = 50)),
+      "modularity" -> (() => Graph.communityModularity(e, iters = 3)))
+    for ((input, e) <- inputs; (op, f) <- ops(e)) {
+      // caps at defaults: the driver path (an empty input never reaches
+      // it); caps 0: the distributed loop
+      val (driver, dist) = SparkTestSession.atBothVenues(SparkTestSession.outcome(f()))
+      withClue(s"$op on $input, driver-vs-distributed:") { dist shouldBe driver }
     }
+    // and each cap does pick the venue: a driver result is a local relation
+    def local(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    SparkTestSession.atBothVenues(
+      (local(Graph.pagerank(inputs.head._2)), local(Graph.triangleCounts(inputs.head._2)))
+    ) shouldBe ((true, true), (false, false))
   }
 
   test("conversionFunnel finds strictly-ordered stage times and stops at the first gap") {

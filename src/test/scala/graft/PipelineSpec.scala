@@ -664,7 +664,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
       (12L, "totally clean document with no benchmark overlap at all")
     ).toDF("doc_id", "text")
     def plain(n: Int) = { // the unfiltered reference join
-      val sh = corpus.select($"doc_id", explode(Dedup.shingles($"text", n)).as("s"))
+      val sh = corpus.select($"doc_id", explode(Dedup.shingles(corpus, $"text", n)).as("s"))
       val bench = sh.filter($"doc_id" < 10).select($"s").distinct()
       sh.filter($"doc_id" >= 10).join(bench, Seq("s"), "left_semi")
         .groupBy($"doc_id").agg(count(lit(1)).as("n_shared"))
@@ -1440,7 +1440,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
       (7L, null.asInstanceOf[String])) // null text
     val df = texts.toDF("doc_id", "text")
     val n = 3; val numHashes = 64; val bands = 16; val r = numHashes / bands
-    val got = df.select(col("doc_id"), Dedup.shingles(col("text"), n).as("sh"))
+    val got = df.select(col("doc_id"), Dedup.shingles(df, col("text"), n).as("sh"))
       .withColumn("bh", graft.functions.MinhashExpressions
         .minhashBands(col("sh"), numHashes, r))
       .as[(Long, Seq[String], Seq[Long])].collect().sortBy(_._1).toList
@@ -1458,7 +1458,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     }
     // the whole projection stays inside generated code — no closure UDF
     val plan = df.select(graft.functions.MinhashExpressions.minhashBands(
-      Dedup.shingles(col("text"), n), numHashes, r))
+      Dedup.shingles(df, col("text"), n), numHashes, r))
       .queryExecution.executedPlan.toString
     plan.contains("ScalaUDF") shouldBe false
     // the full pair operator agrees with itself across partitionings
@@ -1511,38 +1511,76 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     val pairs = ((1 to 120).map { _ =>
       val a = rng.nextInt(60).toLong; val b = rng.nextInt(60).toLong
       (math.min(a, b), math.max(a, b))
-    }.filter(p => p._1 != p._2) ++ (100L to 140L).map(i => (i, i + 1)))
-      .distinct.toDF("id_a", "id_b").localCheckpoint()
-    def rows() = Dedup.dedupGroups(pairs).as[(Long, Long)].collect().sorted.toList
-    val driver = rows()
+    }.filter(p => p._1 != p._2) ++ (100L to 140L).map(i => (i, i + 1))).distinct
+    val driver = Dedup.dedupGroups(pairs.toDF("id_a", "id_b")).as[(Long, Long)].collect()
     // every rep must be its component's minimum (fixpoint property)
     driver.foreach { case (_, rep) =>
       driver.find(_._1 == rep).map(_._2) shouldBe Some(rep) }
-    spark.conf.set("graft.dedup.maxDriverPairs", "0")
-    try rows() shouldBe driver
-    finally spark.conf.unset("graft.dedup.maxDriverPairs")
+    val parquetDir = java.nio.file.Files.createTempDirectory("cc-venues").toString + "/p"
+    pairs.toDF("id_a", "id_b").write.parquet(parquetDir)
+    val inputs = Seq(
+      "random" -> pairs.toDF("id_a", "id_b").localCheckpoint(),
+      "duplicates" -> (pairs ++ pairs.take(30)).toDF("id_a", "id_b"),
+      "empty" -> Seq.empty[(Long, Long)].toDF("id_a", "id_b"),
+      "ids >= 2^31" -> pairs.map { case (a, b) => (a + 3000000000L, b + 3000000000L) }
+        .toDF("id_a", "id_b"),
+      "parquet" -> spark.read.parquet(parquetDir))
+    for ((input, p) <- inputs) {
+      val (d, s) = SparkTestSession.atBothVenues(SparkTestSession.outcome(Dedup.dedupGroups(p)))
+      withClue(s"dedupGroups on $input, driver-vs-distributed:") { s shouldBe d }
+    }
   }
 
   test("BPE: distributed merge rounds == driver rounds (maxDriverVocab forced to 0), ties + non-ASCII") {
     import spark.implicits._
     // engineered count ties (ab/ba both appear equally often) and
     // multibyte symbols, where tie-break order divergence would show
-    val docs = Seq(
+    val rows = Seq(
       (1L, "abab abab κλκλ baba"),
       (2L, "baba abab κλκλ κλκλ"),
       (3L, "ab ba κλ ab ba"),
       (4L, "aaa aaa aaa bbb"),
-      (5L, "😀😀 😀😀 ab")).toDF("doc_id", "text")
-    def train() = graft.pipeline.Bpe.bpeTrain(docs, 6)
-      .collect().map(_.toSeq).toList.sortBy(_.mkString(","))
-    def seg() = graft.pipeline.Bpe.bpeSegment(docs, 6)
-      .collect().map(_.toSeq).toList.sortBy(_.mkString(","))
-    val (tD, sD) = (train(), seg()) // driver path (vocab far below cap)
-    spark.conf.set("graft.bpe.maxDriverVocab", "0")
-    try {
-      train() shouldBe tD
-      seg() shouldBe sD
-    } finally spark.conf.unset("graft.bpe.maxDriverVocab")
+      (5L, "😀😀 😀😀 ab"))
+    val parquetDir = java.nio.file.Files.createTempDirectory("bpe-venues").toString + "/d"
+    rows.toDF("doc_id", "text").write.parquet(parquetDir)
+    val inputs = Seq(
+      "ties" -> rows.toDF("doc_id", "text"),
+      "duplicates" -> (rows ++ rows.take(2)).toDF("doc_id", "text"),
+      // no word at all: the rounds have nothing to merge
+      "empty" -> Seq((1L, ""), (2L, "   ")).toDF("doc_id", "text"),
+      "ids >= 2^31" -> rows.map { case (id, t) => (id + 3000000000L, t) }.toDF("doc_id", "text"),
+      "parquet" -> spark.read.parquet(parquetDir))
+    for ((input, docs) <- inputs; (op, f) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "bpeTrain" -> (() => graft.pipeline.Bpe.bpeTrain(docs, 6)),
+        "bpeSegment" -> (() => graft.pipeline.Bpe.bpeSegment(docs, 6)))) {
+      val (d, s) = SparkTestSession.atBothVenues(SparkTestSession.outcome(f()))
+      withClue(s"$op on $input, driver-vs-distributed:") { s shouldBe d }
+    }
+  }
+
+  test("shingles resolve on the session that owns the documents, not the active one") {
+    import spark.implicits._
+    val other = spark.newSession()
+    val docs = other.createDataFrame(Seq((1L, "a b c d e f g"), (2L, "a b c d e f h")))
+      .toDF("doc_id", "text")
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    docs.filter(col("doc_id") === 1L).select(Dedup.shingles(docs, col("text"), 5))
+      .as[Seq[String]].head() shouldBe Seq("a b c d e", "b c d e f", "c d e f g")
+    Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.5).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe Seq((1L, 2L))
+  }
+
+  test("minhashLshPairs materializes a nondeterministic input once, a deterministic one never") {
+    val logicalRdds = (df: org.apache.spark.sql.DataFrame) =>
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r }.size
+    val docs = spark.range(20).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("w"), (col("id") % 3).cast("string"), lit("x y z")).as("text"))
+    logicalRdds(Dedup.minhashLshPairs(docs, 2, 8, 4)) shouldBe 0
+    val random = docs.withColumn("text",
+      concat_ws(" ", col("text"), (rand(7) * 3).cast("int").cast("string")))
+    // both join sides read the one checkpoint of the banded documents
+    logicalRdds(Dedup.minhashLshPairs(random, 2, 8, 4)) shouldBe 2
   }
 
   test("temperature mixture: isqrt weights, integer quotas, deterministic lowest-hash fill") {
