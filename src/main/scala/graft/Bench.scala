@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — the driver's per-round throughput probe.
   *
   * Runs every declared query three times: an unmeasured warm-up pass
@@ -13,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   * eviction, CPU contention) still records the steady-state number,
   * because transient load only ever ADDS time. Both raw pass totals
   * are emitted alongside so a polluted pass is visible, not hidden.
-  * Output is the contract's single JSON line.
+  * Output is the contract's single JSON line. A query that throws in
+  * either timed pass is recorded as failed: it is left out of
+  * `queries` and every total, and counted in `n_failed`.
   *
   * The line also carries an ENVIRONMENT FINGERPRINT — 1/5/15-minute
   * loadavg before and after the run, the pass spread (slower/faster
@@ -32,16 +32,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+    val spark = GraftSession.local(cpus)
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
 
@@ -57,27 +50,35 @@ object Bench {
       try force(fn(spark, sfDir)) catch { case _: Throwable => () }
     }
 
-    def timedPass(): Seq[(String, Double)] = queries.map { case (name, fn) =>
+    // a query's seconds, or None when it throws
+    def timedPass(): Seq[(String, Option[Double])] = queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { force(fn(spark, sfDir)) } catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
+      try {
+        force(fn(spark, sfDir))
+        name -> Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        name -> None
+      }
     }
     val loadBefore = loadavg()
     val pass1 = timedPass()
     val pass2 = timedPass()
     val loadAfter = loadavg()
-    val results = pass1.zip(pass2).map { case ((name, a), (_, b)) =>
-      name -> math.min(a, b)
+    val timed = pass1.zip(pass2).collect { case ((name, Some(a)), (_, Some(b))) =>
+      (name, a, b)
     }
+    val results = timed.map { case (name, a, b) => name -> math.min(a, b) }
+    val nFailed = queries.length - results.length
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val t1 = pass1.map(_._2).sum; val t2 = pass2.map(_._2).sum
+    val total = results.map(_._2).sum
+    val t1 = timed.map(_._2).sum; val t2 = timed.map(_._3).sum
     val spread = if (math.min(t1, t2) > 0) math.max(t1, t2) / math.min(t1, t2) else 1.0
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"pass_totals":[$t1,$t2],""" +
-        s""""pass_spread":$spread,"n_queries":${results.length},"cpus":$cpus,""" +
-        s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"sf":"$sfDir"}"""
+        s""""pass_spread":$spread,"n_queries":${results.length},"n_failed":$nFailed,""" +
+        s""""cpus":$cpus,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"sf":"$sfDir"}"""
     println(line)
     // The driver's artifact keeps only a 2000-char stdout TAIL. The
     // full contract line above now carries 200+ per-query entries
@@ -95,8 +96,8 @@ object Bench {
       System.err.println(s"bench: could not write $outPath: ${e.getMessage}") }
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","pass_totals":[$t1,$t2],""" +
-        s""""pass_spread":$spread,"n_queries":${results.length},"cpus":$cpus,""" +
-        s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,""" +
+        s""""pass_spread":$spread,"n_queries":${results.length},"n_failed":$nFailed,""" +
+        s""""cpus":$cpus,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,""" +
         s""""queries_file":"$outPath","sf":"$sfDir"}""")
     spark.stop()
   }

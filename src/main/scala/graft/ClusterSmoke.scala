@@ -122,24 +122,29 @@ object ClusterSmoke {
     * write each round's RDD state through the Hadoop FS API and the
     * next round re-reads it (in `local[*]` the write short-circuits
     * through one JVM, so only this path proves the cross-process
-    * round trip). Asserts bit-identical ranks vs the localCheckpoint
-    * path and that checkpoint data landed on disk. */
+    * round trip). The driver cap is 0, so the distributed rounds run.
+    * Asserts bit-identical ranks vs the localCheckpoint path and that
+    * checkpoint data landed on disk. */
   private def checkpointSmoke(spark: SparkSession): Unit = {
     import spark.implicits._
     val edges = Seq((1L, 2L, 5L), (2L, 1L, 1L), (2L, 3L, 4L), (3L, 2L, 2L),
       (3L, 1L, 7L), (1L, 3L, 1L)).toDF("src", "dst", "w")
     val dir = java.nio.file.Files.createTempDirectory("graft_cluster_ckpt").toString
-    def ranks(d: Option[String]) =
-      graft.pipeline.Graph.pagerank(edges, 6, checkpointDir = d)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val reliable = ranks(Some(dir))
-    val local = ranks(None)
+    def ranks() = graft.pipeline.Graph.pagerank(edges, 6)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    spark.conf.set("graft.graph.maxDriverEdges", "0")
+    val local = ranks()
+    spark.conf.set("graft.checkpointDir", dir)
+    val reliable = try ranks() finally {
+      spark.conf.unset("graft.checkpointDir")
+      spark.conf.unset("graft.graph.maxDriverEdges")
+    }
     if (reliable != local)
       sys.error(s"checkpoint smoke mismatch: $reliable vs $local")
     import scala.jdk.CollectionConverters._
-    val entries = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .iterator().asScala.size
-    if (entries <= 1) sys.error("checkpoint smoke: no checkpoint data written")
+    val rdds = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .iterator().asScala.count(_.getFileName.toString.startsWith("rdd-"))
+    if (rdds < 5) sys.error(s"checkpoint smoke: $rdds checkpointed rdds, expected >= 5")
   }
 
   /** Streaming decontamination across REAL executor processes: the

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: renders `explain("formatted")` for plan-shape
   * sensitive queries and asserts the properties that matter at 100 TB
   * (filter/column pushdown to parquet, broadcast of dimension tables,
@@ -17,13 +15,7 @@ object PlanAudit {
     // extra args restrict to those audits (iteration aid); restricted
     // runs print asserts but do NOT rewrite docs/PLANS.md
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8)
     // plan audits assert the AT-SCALE (distributed) shapes, so the
     // small-graph driver fast path is disabled here: at sf0.01 every
     // graph operator would otherwise return a LocalTableScan of the

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured scaling evidence: run the heavy pipeline operators on the
@@ -23,18 +23,10 @@ object ScaleProbe {
     val copies = 10
     // honor the same core-count env as Bench so the probe can produce
     // low-vs-high-core scaling evidence on the 10x replicas
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // reliable-checkpoint exercise: with SPARK_GRAFT_CHECKPOINT_DIR set,
-    // the dedup shared-stage materializations write through the Hadoop
-    // FS path instead of localCheckpoint (PartitionUtil.materializeConf)
+    // every materialization writes through the Hadoop FS path instead
+    // of localCheckpoint (PartitionUtil.materialize)
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty)
       .foreach(d => spark.conf.set("graft.checkpointDir", d))
     import graft.pipeline.{Dedup, Similarity, TextFunctions}

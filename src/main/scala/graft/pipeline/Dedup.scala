@@ -39,19 +39,6 @@ object Dedup {
     graft.functions.MinhashExpressions.wordShingles(tokens(text), n)
   }
 
-  /** Materialize-or-inline for the embedding-family shared stages
-    * (bandedSignatures / normalize / semdedup assignment), knob
-    * `graft.dedup.sharedStageMaterialize` (checkpoint | plain). Unlike
-    * the minhash banding, these stages carry BroadcastNestedLoopJoin
-    * fits or feed 3 consumers, where the round-16/17 A/Bs measured the
-    * one-time materialization clearly ahead (q97 1.87->1.12-class wins)
-    * — so `checkpoint` stays the default; the knob exists to re-measure
-    * per consumer without a rebuild. */
-  private def materializeShared(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("graft.dedup.sharedStageMaterialize",
-        "checkpoint") == "plain") df
-    else PartitionUtil.materializeConf(df)
-
   // ---- anchor sampling (shared by the quality audits) -----------------
 
   /** Deterministic content-hash anchor sample: a row is an anchor iff
@@ -316,7 +303,7 @@ object Dedup {
     val anchored = anchorFraction < 1.0
     // normalize feeds both sides of the exact a<b join — once, not
     // twice (same reused-intermediate materialization as the LSH side)
-    val nv = materializeShared(embeddings.select(col("vec_id"),
+    val nv = PartitionUtil.materialize(embeddings.select(col("vec_id"),
       Similarity.normalizeUdf(Similarity.asDouble(col("embedding"))).as("nv")))
     val aAll = nv.select(col("vec_id").as("id_a"), col("nv").as("va"))
     val a = if (anchored)
@@ -419,41 +406,22 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     graft.functions.MinhashExpressions.register(docs.sparkSession)
-    // the tokenize + shingle + 64-slot MinHash signature pipeline
-    // (all NATIVE codegen'd expressions — no UDF boundary; signature
-    // and band fold fused into graft.functions.MinhashBands) feeds
-    // BOTH sides of the banding self-join. How to share it is a
-    // measured, consumer-dependent choice (optimization guide §3.3/§5
-    // vs §5's "materialize only where recompute > materialization"):
-    //   checkpoint — eager localCheckpoint, computes the banding once
-    //     as its own job; plain — no materialization, the banding runs
-    //     per join side (twice under a broadcast-hash self-join).
-    // Round-16 applied `checkpoint` blanket-wide and q96 regressed
-    // (driver: 1.23 -> 1.63 s); the round-17 per-consumer A/B (quiet
-    // box, interleaved passes — OPTIMIZATION_r17.md) measured `plain`
-    // faster or tied on ALL six consumers once the banding became a
-    // native expression (q96 1.56->1.30, q153 3.26->3.10, q160
-    // 0.74->0.65; q32/q112/q157 within noise), so `plain` is the
-    // default. Scale note: at corpus scale the self-join is SMJ/SHJ
-    // (both sides exceed the broadcast threshold), whose two identical
-    // band-key exchanges collapse via ReuseExchange — the banding still
-    // computes once; only the local broadcast-join regime ever ran it
-    // twice, and there recompute beats the checkpoint write+read.
-    // `plain` needs a deterministic input: each join side evaluates it
-    // again, and a nondeterministic one would band different documents
-    // on each side, so such an input is always checkpointed.
-    val mode =
-      if (!docs.queryExecution.analyzed.deterministic) "checkpoint"
-      else docs.sparkSession.conf.get("graft.dedup.lshPairsMaterialize", "plain")
+    // the banding (native tokenize + shingle + MinHash + band fold)
+    // feeds BOTH sides of the self-join and is left unmaterialized: a
+    // broadcast self-join evaluates it per side, which measured faster
+    // than a checkpoint write + read on every consumer
+    // (OPTIMIZATION_r17.md), and at corpus scale the sort-merge
+    // join's two identical exchanges collapse via ReuseExchange. A
+    // nondeterministic input would band different documents on each
+    // side, so it is materialized once.
     val banded0 = PartitionUtil.spread(docs)
       .select(col("doc_id"), shingles(docs, col("text"), shingleN).as("sh"))
       .select(col("doc_id"), posexplode(
         graft.functions.MinhashExpressions.minhashBands(col("sh"), numHashes, r)))
       .select(col("doc_id"), col("pos").as("band_idx"), col("col").as("band_hash"))
-    val banded = mode match {
-      case "plain" => banded0
-      case _ => PartitionUtil.materializeConf(banded0)
-    }
+    val banded =
+      if (docs.queryExecution.analyzed.deterministic) banded0
+      else PartitionUtil.materialize(banded0)
     val a = banded.select(col("band_idx"), col("band_hash"), col("doc_id").as("id_a"))
     val b = banded.select(col("band_idx"), col("band_hash"), col("doc_id").as("id_b"))
     a.join(b, Seq("band_idx", "band_hash")).filter(col("id_a") < col("id_b"))
@@ -779,8 +747,8 @@ object Dedup {
     // the reused-intermediate move, optimization guide §3.3/§5).
     // O(N·bands) / O(N) narrow rows.
     val (banded0, nv0) = bandedSignatures(embeddings, bands, rowsPerBand, dim, seed)
-    val banded = materializeShared(banded0)
-    val nv = materializeShared(nv0)
+    val banded = PartitionUtil.materialize(banded0)
+    val nv = PartitionUtil.materialize(nv0)
     val a = banded.select(col("band_idx"), col("band_hash"), col("vec_id").as("id_a"))
     val b = banded.select(col("band_idx"), col("band_hash"), col("vec_id").as("id_b"))
     val cand = a.join(b, Seq("band_idx", "band_hash"))
@@ -839,8 +807,8 @@ object Dedup {
     // [[embeddingNearDupLsh]]: banded feeds the old AND new sides,
     // nv both re-score joins — compute each once
     val (banded0, nv0) = bandedSignatures(embeddings, bands, rowsPerBand, dim, seed)
-    val banded = materializeShared(banded0)
-    val nv = materializeShared(nv0)
+    val banded = PartitionUtil.materialize(banded0)
+    val nv = PartitionUtil.materialize(nv0)
     val old = banded.filter(col("vec_id") < splitId)
       .select(col("band_idx"), col("band_hash"), col("vec_id").as("id_old"))
     val fresh = banded.filter(col("vec_id") >= splitId)
@@ -921,7 +889,7 @@ object Dedup {
     // measured 1.91s -> 1.12s warm at sf0.1. O(N) narrow rows
     // (vec_id, cluster, nv), the standard reused-intermediate
     // materialization (optimization guide §3.3/§5).
-    val av = materializeShared(
+    val av = PartitionUtil.materialize(
       Similarity.gridCentroidAssignment(embeddings)
         .select(col("vec_id"), col("cluster"),
           Similarity.normalizeUdf(col("v")).as("nv")))
@@ -1016,20 +984,19 @@ object Dedup {
     * per-iteration plan here is the same building block. Input pairs
     * must satisfy id_a < id_b; output is (id, rep).
     */
-  def dedupGroups(pairs: DataFrame, maxIters: Int = 50,
-                  checkpointDir: Option[String] = None): DataFrame = {
+  def dedupGroups(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     // Iterative algorithms MUST truncate lineage every round: each round
     // references the previous labels three times, so without
     // checkpointing the logical plan grows 3^rounds. The default
     // localCheckpoint materializes the round's result and replaces its
-    // plan with the stored partitions; passing `checkpointDir` swaps in
-    // reliable checkpoint(dir) so an executor loss at production scale
-    // re-reads one round's state instead of replaying the chain.
+    // plan with the stored partitions; the session conf
+    // `graft.checkpointDir` swaps in reliable checkpoints there, so an
+    // executor loss at production scale re-reads one round's state
+    // instead of replaying the chain.
     // materialize the pair plan BEFORE symmetrizing: the union's two
     // branches otherwise each re-execute the (possibly expensive)
     // upstream near-dup computation
-    val p0 = PartitionUtil.materialize(
-      pairs.select(col("id_a"), col("id_b")), checkpointDir)
+    val p0 = PartitionUtil.materialize(pairs.select(col("id_a"), col("id_b")))
     // driver fast path — the graph-family bounded-collect pattern
     // (Graph.scala header note): near-dup pair sets are output-bounded
     // and tiny next to the corpus, while each distributed CC round
@@ -1074,13 +1041,13 @@ object Dedup {
       val sym = PartitionUtil.materialize(
         p0.select(col("id_a").as("src"), col("id_b").as("dst"))
           .union(p0.select(col("id_b").as("src"), col("id_a").as("dst"))),
-        checkpointDir, eager = false)
+        eager = false)
       // fused round 0: from identity labels, one propagation step is just
       // rep = min(id, min neighbor id) — no distinct, no join
       var labels = PartitionUtil.materialize(
         sym.groupBy(col("src")).agg(min(col("dst")).as("m"))
           .select(col("src").as("id"), least(col("src"), col("m")).as("rep")),
-        checkpointDir, eager = false)
+        eager = false)
       var changed = 1L
       var iter = 0
       while (changed > 0 && iter < maxIters) {
@@ -1097,8 +1064,8 @@ object Dedup {
           .join(labels.select(col("id").as("mid"), col("rep").as("jump")), Seq("mid"), "left")
           .select(col("id"), col("old_rep"),
             least(col("mid"), coalesce(col("jump"), col("mid"))).as("rep"))
-        val jumpedM = PartitionUtil.materialize(jumped, checkpointDir,
-          eager = false) // the convergence count materializes it
+        // the convergence count materializes it
+        val jumpedM = PartitionUtil.materialize(jumped, eager = false)
         changed = jumpedM.filter(col("rep") =!= col("old_rep")).count()
         labels = jumpedM
         iter += 1

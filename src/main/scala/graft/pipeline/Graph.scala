@@ -169,17 +169,15 @@ object Graph {
     * sources and destinations coincide and there is no dangling-mass
     * term. Returns (v, rank) with rank BIGINT.
     *
-    * `checkpointDir`: when given, iteration state materializes via
-    * RELIABLE `checkpoint` there instead of `localCheckpoint`, so an
-    * executor loss at production scale replays one round, not the
-    * whole chain. `prePartitionEdges`: hash-partition the edge
+    * Iteration state materializes through [[PartitionUtil.materialize]]
+    * (reliable checkpoints under the session conf `graft.checkpointDir`
+    * when set). `prePartitionEdges`: hash-partition the edge
     * relation by `src` ONCE before the loop — each iteration's rank
     * join then shuffles only the (small) rank vector, never the edge
     * relation; the one-time exchange pays for itself after the first
     * iteration at any real |E| (asserted exchange-free in GraphSpec;
     * measured delta in docs/SCALE.md). */
   def pagerank(edges: DataFrame, iters: Int = 10,
-               checkpointDir: Option[String] = None,
                prePartitionEdges: Boolean = false): DataFrame = {
     // ONE materialization of the (possibly expensive) edge
     // construction — the narrow (src, dst, w) relation everything else
@@ -187,8 +185,7 @@ object Graph {
     // distributed path the out-weight join then reads materialized
     // blocks, so the edge build is guaranteed to run exactly once.
     val e0m = PartitionUtil.materialize(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
-      checkpointDir)
+      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
     // driver fast path (see the header note): the 10 integer rounds —
     // and the whole preamble (out-weights, |V|, max-w guard) — run on
     // the collected edges; no vertex-stats pass, no out-weight join
@@ -205,15 +202,14 @@ object Graph {
       // eagerly materialized so no iteration re-runs edge construction
       val ew0 = PartitionUtil.materialize(
         e0m.join(outw, Seq("src"))
-          .select(col("src"), col("dst"), col("w"), col("ow")),
-        checkpointDir)
+          .select(col("src"), col("dst"), col("w"), col("ow")))
       // ONE materialized |V|-sized vertex-stats relation + ONE tiny
       // aggregate over it replace the preamble's three separate
       // edge-scan jobs (stats agg, node materialization, src/dst
       // mismatch probe) — guide §1.2, fewer passes; every preamble fact
       // (|V|, |E|, max w, zero-indegree / sink flags, the node set
       // itself) reads off the same pass
-      val vstats = vertexStats(ew0, checkpointDir)
+      val vstats = vertexStats(ew0)
       val g = vstats.agg(max(col("mw")).as("mw"), count(col("src")).as("n"),
         sum(col("cnt")).as("m"),
         max(when(col("dst").isNull, 1).otherwise(0)).as("zi"),
@@ -266,7 +262,7 @@ object Graph {
         // path: bound plan depth without a per-iteration job
         rank =
           if (needNodeJoin || k % 5 == 0 || k == iters)
-            PartitionUtil.materialize(stepped, checkpointDir)
+            PartitionUtil.materialize(stepped)
           else stepped
       }
       if (prePartitionEdges) ew.unpersist(false) // rank is materialized
@@ -290,15 +286,13 @@ object Graph {
     * one contribution agg on dst per iteration, O(|E|); the seed flag
     * rides on the materialized node relation, so the per-iteration
     * node join (needed anyway: the base term is per-node) adds no
-    * extra pass. Same `checkpointDir` / `prePartitionEdges` knobs. */
+    * extra pass. Same `prePartitionEdges` knob. */
   def personalizedPagerank(edges: DataFrame, isSeed: Column => Column,
                            iters: Int = 10,
-                           checkpointDir: Option[String] = None,
                            prePartitionEdges: Boolean = false): DataFrame = {
     // same single-materialization preamble as [[pagerank]]
     val e0m = PartitionUtil.materialize(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
-      checkpointDir)
+      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
     // driver fast path (see the header note). The seed predicate is a
     // Column, so it evaluates over a LOCAL relation of the node ids —
     // one LocalTableScan job, no cluster pass.
@@ -319,15 +313,14 @@ object Graph {
       val outw = e0m.groupBy(col("src")).agg(sum(col("w")).as("ow"))
       val ew0 = PartitionUtil.materialize(
         e0m.join(outw, Seq("src"))
-          .select(col("src"), col("dst"), col("w"), col("ow")),
-        checkpointDir)
+          .select(col("src"), col("dst"), col("w"), col("ow")))
       // the same fused preamble as [[pagerank]]: one materialized
       // vertex-stats pass + one tiny aggregate replace the separate
       // stats scan, seeded-node materialization, seed count and
       // src/dst-mismatch probe (4 sequential jobs -> 2); the seed flag
       // is a pure function of the node id, so |seeds| rides the same
       // aggregate
-      val vstats = vertexStats(ew0, checkpointDir)
+      val vstats = vertexStats(ew0)
       val g = vstats.agg(max(col("mw")).as("mw"), sum(col("cnt")).as("m"),
         max(when(col("dst").isNull, 1).otherwise(0)).as("zi"),
         max(when(col("src").isNull, 1).otherwise(0)).as("sk"),
@@ -375,7 +368,7 @@ object Graph {
         // checkpoints — the pagerank fast-path pattern
         rank =
           if (k % 5 == 0 || k == iters)
-            PartitionUtil.materialize(stepped, checkpointDir)
+            PartitionUtil.materialize(stepped)
           else stepped
       }
       if (prePartitionEdges) ew.unpersist(false)
@@ -434,14 +427,12 @@ object Graph {
     * (guide §1.2: fewer passes). Cost: two map-side-combined O(|E|)
     * aggregations + one |V|-sized join, the same volume the old
     * mismatch probe alone paid. */
-  private[graft] def vertexStats(ew0: DataFrame,
-                                 checkpointDir: Option[String]): DataFrame =
+  private[graft] def vertexStats(ew0: DataFrame): DataFrame =
     PartitionUtil.materialize(
       ew0.groupBy(col("src"))
         .agg(count(lit(1)).as("cnt"), max(col("w")).as("mw"))
         .join(ew0.select(col("dst")).distinct(), col("src") === col("dst"), "full")
-        .select(col("src"), col("cnt"), col("mw"), col("dst")),
-      checkpointDir)
+        .select(col("src"), col("cnt"), col("mw"), col("dst")))
 
   private[graft] def srcDstMismatch(nodes: DataFrame, ew: DataFrame): Boolean = {
     val r = nodes
@@ -631,13 +622,11 @@ object Graph {
     * KMV/HLL sketch family this engine already carries). Each round:
     * one |frontier|·avg-degree equi-join + one anti join + distinct,
     * all hash-shuffled on (s, v); state materializes per round. */
-  def harmonicCentrality(edges: DataFrame, radius: Int = 3,
-                         checkpointDir: Option[String] = None): DataFrame = {
+  def harmonicCentrality(edges: DataFrame, radius: Int = 3): DataFrame = {
     require(radius >= 1, s"harmonicCentrality: radius must be >= 1, got $radius")
     val e0 = PartitionUtil.materialize(
       edges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct(),
-      checkpointDir)
+        .filter(col("src") =!= col("dst")).distinct())
     val m = e0.count()
     // driver fast path (see the header note; the quadratic cap — this
     // is Σ|ball| work): multi-source BFS, first distance wins
@@ -675,12 +664,11 @@ object Graph {
       val frontiers = scala.collection.mutable.ArrayBuffer(
         PartitionUtil.materialize(
           e.select(col("src").as("s")).distinct()
-            .select(col("s"), col("s").as("v"), lit(0L).as("d")),
-          checkpointDir))
+            .select(col("s"), col("s").as("v"), lit(0L).as("d"))))
       for (k <- 1 to radius) {
         val all = frontiers.reduce(_ union _)
         val next = PartitionUtil.materialize(
-          harmonicHop(e, frontiers.last, all, k), checkpointDir)
+          harmonicHop(e, frontiers.last, all, k))
         frontiers += next
       }
       frontiers.reduce(_ union _).filter(col("d") > 0)
@@ -751,8 +739,7 @@ object Graph {
     * map-side-combined sketch-merge aggregation; self-loops carry
     * each node's own sketch through the same merge (no separate
     * union-with-previous pass); state materializes per round. */
-  def neighborhoodFunction(edges: DataFrame, radius: Int = 3, k: Int = 32,
-                           checkpointDir: Option[String] = None): DataFrame = {
+  def neighborhoodFunction(edges: DataFrame, radius: Int = 3, k: Int = 32): DataFrame = {
     require(radius >= 1, s"neighborhoodFunction: radius must be >= 1")
     require(k >= 1, s"neighborhoodFunction: k must be >= 1")
     val spark = edges.sparkSession
@@ -764,8 +751,7 @@ object Graph {
       .filter(col("src") =!= col("dst")).distinct()
     val nodes = e0.select(col("src").as("v")).distinct()
     val eM = PartitionUtil.materialize(
-      e0.union(nodes.select(col("v").as("src"), col("v").as("dst"))),
-      checkpointDir)
+      e0.union(nodes.select(col("v").as("src"), col("v").as("dst"))))
     val m = eM.count()
     // driver fast path (see the header note; quadratic cap — per-round
     // work is O(|E|·k) sketch merges): the identical bottom-k sketch
@@ -799,7 +785,7 @@ object Graph {
     } {
       val e = eM.coalesce(loopParts(eM, m))
       var hb = PartitionUtil.materialize(
-        nodes.select(col("v"), array(h62).as("sk")), checkpointDir)
+        nodes.select(col("v"), array(h62).as("sk")))
       val est =
         when(size(col("sk")) < k, size(col("sk")).cast("long"))
           .otherwise(expr(
@@ -808,7 +794,7 @@ object Graph {
       val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       for (r <- 1 to radius) {
         hb = PartitionUtil.materialize(
-          hyperballRound(e, hb, merge), checkpointDir)
+          hyperballRound(e, hb, merge))
         rounds += hb.select(col("v"), lit(r.toLong).as("r"),
           size(col("sk")).cast("long").as("k_used"),
           element_at(col("sk"), -1).as("kth"),
@@ -884,13 +870,11 @@ object Graph {
     * round materializes (the dedupGroups discipline, not pagerank's
     * every-5th: chaining here would square the plan per round). */
   def cheapestPaths(edges: DataFrame, isSeed: Column => Column,
-                    hops: Int = 4,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    hops: Int = 4): DataFrame = {
     require(hops >= 1, s"cheapestPaths: hops must be >= 1, got $hops")
     val e0 = PartitionUtil.materialize(
       edges.select(col("src"), col("dst"), col("cost").cast("long").as("cost"))
-        .filter(col("src") =!= col("dst")),
-      checkpointDir)
+        .filter(col("src") =!= col("dst")))
     val m = e0.count()
     // driver fast path (see the header note): min-plus relaxation over
     // the collected edges — integer min is reduction-order-free
@@ -916,11 +900,11 @@ object Graph {
       val e = e0.coalesce(loopParts(e0, m))
       val seeds = e.select(col("src").as("v")).distinct().filter(isSeed(col("v")))
       var dist = PartitionUtil.materialize(
-        seeds.select(col("v"), lit(0L).as("cost")), checkpointDir)
+        seeds.select(col("v"), lit(0L).as("cost")))
       require(dist.limit(1).count() > 0,
         "cheapestPaths: seed predicate matched no node")
       for (_ <- 1 to hops) {
-        dist = PartitionUtil.materialize(relaxRound(e, dist), checkpointDir)
+        dist = PartitionUtil.materialize(relaxRound(e, dist))
       }
       dist
     }
@@ -980,14 +964,12 @@ object Graph {
     * monotonically; edges materialize per round (each round
     * references the survivors twice). Returns (v, core_deg) for the
     * surviving nodes, core_deg = the node's degree inside the core. */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12,
-            checkpointDir: Option[String] = None): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     var e = PartitionUtil.materialize(
       edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct(),
-      checkpointDir)
+        .filter(col("a") =!= col("b")).distinct())
     // carry the surviving-edge count across rounds: the materialize is
     // eager (its job already counts nothing), so ONE count() action per
     // peel round suffices — the previous round's count is a variable,
@@ -1018,7 +1000,7 @@ object Graph {
       var converged = false
       var r = 0
       while (!converged && r < maxRounds) {
-        val pruned = PartitionUtil.materialize(peelRound(e, k), checkpointDir)
+        val pruned = PartitionUtil.materialize(peelRound(e, k))
         val m = pruned.count()
         converged = m == mPrev
         mPrev = m
@@ -1107,16 +1089,13 @@ object Graph {
     * reference-free (the edge relation and the seed labels are both
     * materialized), so the label vector checkpoints every 5th round
     * and at the end — bounded plan depth without a per-round job.
-    * `checkpointDir` switches the materialization to reliable
-    * `checkpoint`; `prePartitionEdges` hash-partitions the edges by
+    * `prePartitionEdges` hash-partitions the edges by
     * `dst` once so each round's label join shuffles only the label
     * vector. */
   def labelPropagation(edges: DataFrame, iters: Int = 5,
-                       checkpointDir: Option[String] = None,
                        prePartitionEdges: Boolean = false): DataFrame = {
     val e0 = PartitionUtil.materialize(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
-      checkpointDir)
+      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
     val m = e0.count()
     // driver fast path (see the header note): synchronous LPA rounds
     // over the collected edges — argmax by (weight desc, label asc),
@@ -1169,13 +1148,12 @@ object Graph {
         } else e0.coalesce(parts)
       var labels = PartitionUtil.materialize(
         e.select(col("src").as("v")).distinct()
-          .select(col("v"), col("v").as("label")),
-        checkpointDir)
+          .select(col("v"), col("v").as("label")))
       for (k <- 1 to iters) {
         val stepped = lpaRound(e, labels)
         labels =
           if (k % 5 == 0 || k == iters)
-            PartitionUtil.materialize(stepped, checkpointDir)
+            PartitionUtil.materialize(stepped)
           else stepped
       }
       if (prePartitionEdges) e.unpersist(false) // labels are materialized
@@ -1238,7 +1216,7 @@ object Graph {
     * scalar is a single driver pull. */
   def communityModularity(edges: DataFrame, iters: Int): DataFrame = {
     val ec = PartitionUtil.materialize(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")), None)
+      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
     val labels = labelPropagation(ec, iters)
     val und = ec.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))

@@ -3,6 +3,8 @@ package graft.pipeline
 import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.functions._
@@ -122,39 +124,32 @@ object PartitionUtil {
     bigS.join(smallS, Seq(key, "_salt")).drop("_salt")
   }
 
-  /** Materialize one iteration's state for the iterative operators
-    * (pagerank / label propagation / k-means / CC pointer jumping):
-    * `localCheckpoint` by default — executor-local blocks, fast, but
-    * an executor loss replays the FULL lineage chain — or a RELIABLE
-    * `checkpoint` under `dir` when given, writing through the Hadoop
-    * FS API (HDFS/S3A/...), so at production scale a lost executor
-    * re-reads one round's state instead of recomputing every round
-    * since the source scan. NOTE: under AQE neither form preserves
-    * the plan's output partitioning (the LogicalRDD reports unknown
-    * partitioning) — to materialize AND keep a hash partitioning
-    * across joins, `persist()` the repartitioned plan instead (see
-    * Graph's prePartitionEdges). */
-  def materialize(df: DataFrame, checkpointDir: Option[String],
-                  eager: Boolean = true): DataFrame =
-    checkpointDir match {
-      case Some(d) =>
+  /** Materialize one iteration's state (or a stage shared by several
+    * consumers). The session conf `graft.checkpointDir` of `df`'s
+    * session decides where: unset or empty means `localCheckpoint` —
+    * executor-local blocks, fast, but an executor loss replays the
+    * FULL lineage chain; a path means a RELIABLE `checkpoint` under
+    * it, written through the Hadoop FS API (HDFS/S3A/...), so at
+    * production scale a lost executor re-reads one round's state
+    * instead of recomputing every round since the source scan.
+    * `SparkContext.setCheckpointDir(d)` stores a fresh `d/<uuid>`, so
+    * the context's dir is set again only when its parent is not `d`.
+    * NOTE: under AQE neither form preserves the plan's output
+    * partitioning (the LogicalRDD reports unknown partitioning) — to
+    * materialize AND keep a hash partitioning across joins,
+    * `persist()` the repartitioned plan instead (see Graph's
+    * prePartitionEdges). */
+  def materialize(df: DataFrame, eager: Boolean = true): DataFrame =
+    df.sparkSession.conf.get("graft.checkpointDir", "") match {
+      case "" => df.localCheckpoint(eager)
+      case d =>
         val sc = df.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.contains(d)) sc.setCheckpointDir(d)
+        val dir = new Path(d)
+        val want = dir.getFileSystem(sc.hadoopConfiguration).makeQualified(dir)
+        if (!sc.getCheckpointDir.exists(c => new Path(c).getParent == want))
+          sc.setCheckpointDir(d)
         df.checkpoint(eager)
-      case None => df.localCheckpoint(eager)
     }
-
-  /** [[materialize]] with the checkpoint dir read from the session
-    * conf `graft.checkpointDir` (empty/unset = localCheckpoint) — for
-    * the operators whose signatures don't thread an explicit dir (the
-    * dedup-family shared-stage materializations). At 100 TB set the
-    * conf to an HDFS/S3A path so an executor loss re-reads one
-    * materialized stage instead of truncating localCheckpoint lineage
-    * and failing the query. */
-  def materializeConf(df: DataFrame, eager: Boolean = true): DataFrame =
-    materialize(df,
-      Option(df.sparkSession.conf.get("graft.checkpointDir", "")).filter(_.nonEmpty),
-      eager)
 
   /** Skew-resistant ORDER-SENSITIVE top-k per key — the rank case
     * [[saltedWindow]] deliberately excludes: row-for-row equivalent to

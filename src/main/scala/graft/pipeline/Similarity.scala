@@ -2392,16 +2392,14 @@ object Similarity {
     * broadcasts k·d centroid rows against one corpus scan and both
     * aggregations are map-side combined. State between iterations is
     * the k·d centroid relation (localCheckpointed — microscopic). */
-  def distributedKMeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3,
-                        checkpointDir: Option[String] = None): DataFrame = {
+  def distributedKMeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
     require(iters >= 1, s"distributedKMeans: iters must be >= 1, got $iters")
     require(k >= 1, s"distributedKMeans: k must be >= 1, got $k")
     val gdim0 = PartitionUtil.materialize(
       PartitionUtil.spread(embeddings)
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
         .select(col("vec_id"), col("d").cast("long").as("d"),
-          floor(col("x").cast("double") * lit(10000.0)).cast("long").as("g")),
-      checkpointDir)
+          floor(col("x").cast("double") * lit(10000.0)).cast("long").as("g")))
     // size the per-iteration jobs to the data (the pagerank pattern),
     // but CPU-denser than the edge relation: the assignment join
     // multiplies each grid triple by k, so ~250k triples per partition
@@ -2412,8 +2410,7 @@ object Similarity {
     val gdim = gdim0.coalesce(parts)
     var cent = PartitionUtil.materialize(
       gdim.filter(col("vec_id") < k)
-        .select(col("vec_id").as("j"), col("d"), col("g").as("c")),
-      checkpointDir)
+        .select(col("vec_id").as("j"), col("d"), col("g").as("c")))
     require(!cent.isEmpty,
       s"distributedKMeans: no seeds with vec_id < $k — ids must be 0-based contiguous")
     var assign: DataFrame = null
@@ -2428,8 +2425,7 @@ object Similarity {
         gdim.join(assign, Seq("vec_id"))
           .groupBy(col("cluster"), col("d"))
           .agg(floor(sum(col("g")).cast("double") / count(lit(1))).cast("long").as("c"))
-          .select(col("cluster").as("j"), col("d"), col("c")),
-        checkpointDir)
+          .select(col("cluster").as("j"), col("d"), col("c")))
     }
     // the total sort exists ONLY for gate hash stability (every gate
     // query ends in total ORDER BY); a production pipeline would

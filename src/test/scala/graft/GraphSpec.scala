@@ -361,20 +361,40 @@ class GraphSpec extends AnyFunSuite with Matchers {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("checkpointDir: reliable-checkpoint path is bit-identical and writes state") {
+  private val ckptGraph = Seq((1L, 2L, 5L), (2L, 1L, 1L), (2L, 3L, 4L), (3L, 2L, 2L),
+    (3L, 1L, 7L), (1L, 3L, 1L))
+  /** `ckptGraph`'s pagerank on the distributed venue (cap 0), with
+    * `graft.checkpointDir` set to `dir` when given. */
+  private def distributedRanks(dir: Option[String]): Map[Long, Long] = {
     import spark.implicits._
-    val g = Seq((1L, 2L, 5L), (2L, 1L, 1L), (2L, 3L, 4L), (3L, 2L, 2L),
-      (3L, 1L, 7L), (1L, 3L, 1L))
-    val df = g.toDF("src", "dst", "w")
+    spark.conf.set("graft.graph.maxDriverEdges", "0")
+    dir.foreach(spark.conf.set("graft.checkpointDir", _))
+    try Graph.pagerank(ckptGraph.toDF("src", "dst", "w"), 6)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally {
+      spark.conf.unset("graft.checkpointDir")
+      spark.conf.unset("graft.graph.maxDriverEdges")
+    }
+  }
+
+  test("checkpointDir: reliable-checkpoint path is bit-identical and writes state") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec").toString
-    Graph.pagerank(df, 6, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
-      refPagerank(g, 6)
-    // the reliable checkpoint actually wrote rdd state under dir
+    val reliable = distributedRanks(Some(dir))
+    reliable shouldBe refPagerank(ckptGraph, 6)
+    reliable shouldBe distributedRanks(None)
+    // the distributed rounds wrote their rdd state under dir: the edge
+    // relation, the out-weight edges, the vertex stats and the rank
+    // vector at rounds 5 and 6
     import scala.jdk.CollectionConverters._
-    val entries = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .iterator().asScala.size
-    entries should be > 1
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .count(_.getFileName.toString.startsWith("rdd-")) shouldBe 5
+  }
+
+  test("checkpointDir: the dir gets one checkpoint subdirectory, not one per materialization") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec").toFile
+    distributedRanks(Some(dir.toString))
+    distributedRanks(Some(dir.toString))
+    dir.listFiles().count(_.isDirectory) shouldBe 1
   }
 
   test("harmonicCentrality equals brute-force BFS on seeded random graphs") {

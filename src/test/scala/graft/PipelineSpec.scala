@@ -1482,19 +1482,37 @@ class PipelineSpec extends AnyFunSuite with Matchers {
       .as[(Long, Long, Long)].collect().sorted.toList
     def semRows() = Dedup.semDedup(emb, 0.3, 8)
       .as[(Long, Long, Long)].collect().toList
+    // the connected-components rounds at the distributed venue
+    def groupRows() = {
+      spark.conf.set("graft.dedup.maxDriverPairs", "0")
+      try Dedup.dedupGroups(pairRows().toDF("id_a", "id_b", "n_bands"))
+        .as[(Long, Long)].collect().sorted.toList
+      finally spark.conf.unset("graft.dedup.maxDriverPairs")
+    }
+    def kmeansRows() = graft.pipeline.Similarity.distributedKMeans(emb, 4, 3)
+      .as[(Long, Long)].collect().toList
     val basePairs = pairRows(); val baseSem = semRows()
+    val baseGroups = groupRows(); val baseKmeans = kmeansRows()
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec").toString
+    // checkpointed rdds written under the dir so far
+    def rdds(): Long = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .count(_.getFileName.toString.startsWith("rdd-"))
+    }
     spark.conf.set("graft.checkpointDir", dir)
     try {
+      // a deterministic banding input is never materialized
       pairRows() shouldBe basePairs
-      semRows() shouldBe baseSem
-      // the reliable path actually wrote state under the dir
-      def count(f: java.io.File): Int =
-        if (f.isFile) 1
-        else Option(f.listFiles()).getOrElse(Array.empty).map(count).sum
-      count(new java.io.File(dir)) should be > 0
+      rdds() shouldBe 0
+      for ((rows, base) <- Seq((() => semRows(), baseSem), (() => groupRows(), baseGroups),
+          (() => kmeansRows(), baseKmeans))) {
+        val before = rdds()
+        rows() shouldBe base
+        rdds() should be > before
+      }
     } finally {
-      spark.conf.set("graft.checkpointDir", "")
+      spark.conf.unset("graft.checkpointDir")
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
         f.delete(): Unit

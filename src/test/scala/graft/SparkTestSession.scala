@@ -9,13 +9,7 @@ import org.apache.spark.sql.types.StructType
   * repartition calls instead). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4, "spark.app.name" -> "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
