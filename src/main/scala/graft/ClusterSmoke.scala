@@ -37,7 +37,7 @@ object ClusterSmoke {
     "q112_leakage_safe_split", // CC labels + md5-bucket split: checkpointed rounds re-read cross-JVM
     "q114b_pq_kmeans", // broadcast 3-D codebook array into an executor-side argmin UDF
     "q115_rrf_fusion", // both retrieval legs + the k-row fusion join across JVMs
-    "img20_dicom_series", // executor-side Hadoop FS writes + binaryFile scan + mapGroups stacking
+    "img20_dicom_series", // executor-side Hadoop FS writes + imagedir scan + mapGroups stacking
     "q119_pagerank", // 10 localCheckpoint'd integer-rank rounds re-read across worker JVMs
     "q126_kmeans", // broadcast centroid relation + grid-triple aggs per Lloyd iteration cross-JVM
     "q146_blocklist", // the Aho-Corasick automaton program broadcasts into executor-side scans

@@ -15,45 +15,25 @@ import graft.sources.ImageCodecIO
   */
 object ImageOps {
 
-  /** The `binaryFile` rows (path, modificationTime, length, content) of
-    * the files `pathGlob` names. Spark expands a glob into one root path
-    * per matching file, and above
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) root
-    * paths it lists them with a distributed job while the DataFrame is
-    * still being built. When only the last path component has
-    * wildcards, the directory is read instead with that component as
-    * `pathGlobFilter`: one root path, listed on the driver, no job.
-    * `recursiveFileLookup` keeps subdirectory names from being inferred
-    * as partition columns, and the filter on the parent keeps only the
-    * directory's direct children, as the glob would. Any other path
-    * loads as given. */
-  private[graft] def binaryFiles(spark: SparkSession, pathGlob: String): DataFrame = {
-    def hasGlob(s: String) = s.exists("*?[{\\".contains(_))
-    val cut = pathGlob.lastIndexOf('/')
-    val (dir, name) = (pathGlob.substring(0, math.max(cut, 0)), pathGlob.substring(cut + 1))
-    if (cut <= 0 || hasGlob(dir) || !hasGlob(name)) spark.read.format("binaryFile").load(pathGlob)
-    else {
-      val dirPath = new org.apache.hadoop.fs.Path(dir)
-      val qualified = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .makeQualified(dirPath).toString
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", name).option("recursiveFileLookup", "true")
-        .load(dir)
-        .filter(regexp_replace(col("path"), "/[^/]*$", "") === lit(qualified))
-    }
+  /** The `imagedir` scan of the files `pathGlob` names: a directory,
+    * then a file-name glob (`dir/s_*.dcm`). The directory is
+    * listed on the driver while the plan is built, with no job, and
+    * only its direct children are read. */
+  private[graft] def imageFiles(spark: SparkSession, pathGlob: String): DataFrame = {
+    val glob = new org.apache.hadoop.fs.Path(pathGlob)
+    val dir = glob.getParent.toString
+    require(!new org.apache.hadoop.fs.GlobPattern(dir).hasWildcard,
+      s"wildcards are supported in the file name only: $pathGlob")
+    spark.read.format("imagedir").option("path", dir)
+      .option("pattern", org.apache.hadoop.fs.GlobPattern.compile(glob.getName).pattern())
+      .load()
   }
 
-  /** Distributed image load: binaryFile source + in-task decode
-    * (rebuild of `loadImages`/`ijFile`, scOps.scala:75-97, 309-316).
-    * The decode UDF runs inside the scan projection, so metadata-only
-    * queries on the result still read the files — use `imagedebug` or
-    * parquet catalogs when pixels aren't needed. */
-  def loadImages(spark: SparkSession, pathGlob: String): DataFrame = {
-    val decode = udf((path: String, content: Array[Byte]) => ImageCodecIO.decode(path, content))
-    binaryFiles(spark, pathGlob)
-      .select(col("path").as("sample"),
-              decode(col("path"), col("content")).as("image"))
-  }
+  /** Distributed image load through the `imagedir` scan (rebuild of
+    * `loadImages`/`ijFile`, scOps.scala:75-97, 309-316): files decode
+    * inside the scan, and only when a query needs `image`. */
+  def loadImages(spark: SparkSession, pathGlob: String): DataFrame =
+    imageFiles(spark, pathGlob).select(col("path").as("sample"), col("image"))
 
   /** Driver-side load (rebuild of `loadImagesDriver`, scOps.scala:134-151)
     * — only for small path lists. */
@@ -91,7 +71,7 @@ object ImageOps {
 
   // never emit a leading "_" or "." — Spark's file index treats those
   // as hidden/metadata files and silently skips them
-  private def safeName(sample: String): String =
+  private[graft] def safeName(sample: String): String =
     sample.replaceAll("[^A-Za-z0-9._-]", "_").replaceAll("^[_.]+", "") match {
       case "" => "img"
       case s => s
@@ -173,7 +153,7 @@ object ImageOps {
     * reads a 68-slice series the same way, IjRDDTests.scala:30-99).
     *
     * Scale shape: decode is per-file map work on the distributed
-    * binaryFile scan; the stack regroup shuffles each series' slices
+    * `imagedir` scan's `content`; the stack regroup shuffles each series' slices
     * to one task — bounded by slices-per-series (hundreds), never by
     * corpus size — so a 100 TB archive of series parallelizes across
     * series. */
@@ -182,11 +162,9 @@ object ImageOps {
     val decode = udf { (path: String, content: Array[Byte]) =>
       ImageCodecIO.decodeDicomWithInstance(path, content)
     }
-    binaryFiles(spark, pathGlob)
-      .select(col("path"), decode(col("path"), col("content")).as("d"))
-      .select(
-        regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1), "_\\d+\\.dcm$", "")
-          .as("series"),
+    imageFiles(spark, pathGlob)
+      .select(col("name"), decode(col("path"), col("content")).as("d"))
+      .select(regexp_replace(col("name"), "_\\d+\\.dcm$", "").as("series"),
         col("d._2").as("inst"), col("d._1").as("image"))
       .as[(String, Int, SparkImage)]
       .groupByKey(_._1)
@@ -296,19 +274,13 @@ object ImageOps {
 
   /** Multi-frame DICOM load: each FILE is a whole stack (frames →
     * slices in frame order), so — unlike [[loadDicomSeries]] — there
-    * is NO regroup shuffle at all: decode is pure per-file map work on
-    * the distributed binaryFile scan, and a 100 TB archive of
-    * multi-frame objects parallelizes file-per-task end to end. */
-  def loadDicomMultiFrame(spark: SparkSession, pathGlob: String): DataFrame = {
-    val decode = udf { (path: String, content: Array[Byte]) =>
-      ImageCodecIO.decodeDicomWithInstance(path, content)._1
-    }
-    binaryFiles(spark, pathGlob)
-      .select(
-        regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1), "\\.dcm$", "")
-          .as("name"),
-        decode(col("path"), col("content")).as("image"))
-  }
+    * is NO regroup shuffle at all: decode is pure per-file map work in
+    * the distributed `imagedir` scan, and a 100 TB archive of
+    * multi-frame objects parallelizes file-per-task end to end. A query
+    * that drops `image` (`select("name")`) reads no file bytes. */
+  def loadDicomMultiFrame(spark: SparkSession, pathGlob: String): DataFrame =
+    imageFiles(spark, pathGlob)
+      .select(regexp_replace(col("name"), "\\.dcm$", "").as("name"), col("image"))
 
   /** Archive inventory over a DICOM file glob — the cheap first pass
     * a PACS ingest runs before committing to a decode plan: per
@@ -317,7 +289,7 @@ object ImageOps {
     * header elements (the full decode also runs here to surface
     * geometry — at inventory time one would swap it for the
     * header-only walk; both are per-file map work on the distributed
-    * binaryFile scan, no shuffle beyond the final syntax-count agg,
+    * `imagedir` scan's `content`, no shuffle beyond the final syntax-count agg,
     * which is bounded by the handful of registered syntaxes). */
   def dicomCensus(spark: SparkSession, pathGlob: String): DataFrame = {
     val syntax = udf { (path: String, content: Array[Byte]) =>
@@ -326,13 +298,11 @@ object ImageOps {
     val decode = udf { (path: String, content: Array[Byte]) =>
       ImageCodecIO.decodeDicomWithInstance(path, content)
     }
-    binaryFiles(spark, pathGlob)
-      .select(col("path"),
+    imageFiles(spark, pathGlob)
+      .select(col("name"),
         syntax(col("path"), col("content")).as("ts"),
         decode(col("path"), col("content")).as("d"))
-      .select(col("ts"),
-        regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1), "_\\d+\\.dcm$", "")
-          .as("series"),
+      .select(col("ts"), regexp_replace(col("name"), "_\\d+\\.dcm$", "").as("series"),
         col("d._2").as("inst"),
         col("d._1.width").as("w"), col("d._1.height").as("h"))
       .groupBy(col("ts"))

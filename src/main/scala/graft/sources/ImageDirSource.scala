@@ -4,8 +4,13 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -13,24 +18,39 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.core.SparkImage
+import graft.ops.ImageOps
 
 /** DSv2 file-directory image source — the DDL face of `loadImages`
-  * (reference `loadImages`/`ijFile`, scOps.scala:75-97, 309-316):
+  * (reference `loadImages`/`ijFile`, scOps.scala:75-97, 309-316), and
+  * the one reader every `ImageOps` loader scans through:
   *
   * {{{
   * CREATE TEMPORARY VIEW MyImages
   * USING imagedir OPTIONS (path "/data/imgs", pattern ".*\\.png")
   * }}}
   *
-  * Schema: path, name, size, image. Column pruning means a catalog
-  * query (`SELECT path, size`) reads directory entries only — no file
-  * bytes, no decode; the reference's source decoded everything always.
-  * Files are dealt round-robin over `partitions` input partitions in
-  * sorted path order (file i to partition i mod n), so placement is
-  * deterministic. Contiguous slices would put files that sort together
-  * (one series, or one codec's files named alike) into one task, and
-  * that task would set the scan's wall time whenever their decode
-  * costs more than the rest.
+  * Options: `path` (a directory on any Hadoop FS scheme, read with the
+  * session's Hadoop configuration), `pattern` (a regex the file name
+  * must match), `partitions` (default: the session's default
+  * parallelism, capped by the file count) and, on write, `format`.
+  *
+  * The directory is listed once, on the driver, at planning time: its
+  * direct children that are files, whose names match `pattern` and do
+  * not start with `_` or `.` (Spark's file index hides those too, which
+  * keeps out `.crc` side files). Schema: path (qualified Hadoop path),
+  * name, size (from the listing), content (the file's bytes), image.
+  * Column pruning means a catalog query (`SELECT name, size`) opens no
+  * file: only `content` and `image` read bytes, and only `image`
+  * decodes; the reference's source decoded everything always.
+  * Files are dealt round-robin over the input partitions in sorted path
+  * order (file i to partition i mod n), so placement is deterministic.
+  * Contiguous slices would put files that sort together (one series, or
+  * one codec's files named alike) into one task, and that task would
+  * set the scan's wall time whenever their decode costs more than the
+  * rest.
   */
 class ImageDirSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "imagedir"
@@ -46,19 +66,21 @@ object ImageDirSource {
     StructField("path", StringType, nullable = false),
     StructField("name", StringType, nullable = false),
     StructField("size", LongType, nullable = false),
+    StructField("content", BinaryType, nullable = false),
     StructField("image", ImageDebugSource.imageSchema, nullable = true)))
 
-  private[sources] def listFiles(dir: String, pattern: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(p)) return Seq.empty
+  /** Sorted (qualified path, size) of the files under `dir` to scan. */
+  private[sources] def listFiles(spark: SparkSession, dir: String,
+                                 pattern: String): Seq[(String, Long)] = {
+    val p = new Path(dir)
     val rx = pattern.r
-    val s = java.nio.file.Files.list(p)
-    try s.iterator().asScala
-      .filter(f => java.nio.file.Files.isRegularFile(f))
-      .map(_.toString)
-      .filter(f => rx.matches(f.substring(f.lastIndexOf('/') + 1)))
-      .toSeq.sorted
-    finally s.close()
+    val statuses =
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    statuses.filter { s =>
+      val name = s.getPath.getName
+      s.isFile && !name.startsWith("_") && !name.startsWith(".") && rx.matches(name)
+    }.map(s => (s.getPath.toString, s.getLen)).sortBy(_._1)
   }
 }
 
@@ -66,21 +88,30 @@ class ImageDirTable(options: Map[String, String]) extends Table
     with SupportsRead with SupportsWrite {
   override def name(): String = s"imagedir(${options.getOrElse("path", ".")})"
   override def schema(): StructType = ImageDirSource.schema
+  // a write needs only `name` and `image`: the read-only columns need
+  // not be supplied
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
+      TableCapability.TRUNCATE, TableCapability.ACCEPT_ANY_SCHEMA)
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     new ImageDirScanBuilder(options)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new ImageDirWriteBuilder(options, info.schema())
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val in = info.schema()
+    def has(col: String, t: DataType) = in.fieldNames.contains(col) &&
+      DataType.equalsStructurally(in(col).dataType, t, ignoreNullability = true)
+    require(has("name", StringType) && has("image", ImageDebugSource.imageSchema),
+      s"imagedir write needs a string `name` and an image `image` column: ${in.simpleString}")
+    new ImageDirWriteBuilder(options, in)
+  }
 }
 
 /** Write path — the capability the reference only stubbed
   * (`CreatableRelationProvider` with an unimplemented createRelation,
   * AbstractImageSource.scala:47-54): each input row encodes one file
   * `<name>` under the table's `path` (format from the `format` option
-  * or the name's extension; default png). `path`/`size` input columns
-  * are ignored on write — they're recomputed by the next scan.
+  * or the name's extension; default png), through the Hadoop FS and
+  * named as [[graft.ops.ImageOps.saveImages]] names its files. Other
+  * input columns are ignored on write — the next scan recomputes them.
   * Overwrite mode truncates by accepting the same directory (files are
   * replaced name-by-name; stale names are NOT deleted — shared-FS
   * semantics, same contract as [[graft.ops.ImageOps.saveImages]]). */
@@ -95,49 +126,33 @@ class ImageDirWriteBuilder(options: Map[String, String], inputSchema: StructType
 class ImageDirBatchWrite(options: Map[String, String], inputSchema: StructType)
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    ImageDirWriterFactory(options.getOrElse("path", "."),
-      options.get("format"), inputSchema)
+    ImageDirWriterFactory(options.getOrElse("path", "."), options.get("format"),
+      inputSchema.fieldIndex("name"), inputSchema.fieldIndex("image"),
+      new SerializableConfiguration(SparkSession.active.sparkContext.hadoopConfiguration))
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-case class ImageDirWriterFactory(dir: String, format: Option[String],
-                                 inputSchema: StructType) extends DataWriterFactory {
+case class ImageDirWriterFactory(dir: String, format: Option[String], nameIdx: Int,
+                                 imageIdx: Int, conf: SerializableConfiguration)
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val nameIdx = inputSchema.fieldIndex("name")
-    val imageIdx = inputSchema.fieldIndex("image")
     val imageFields = ImageDebugSource.imageSchema.length
-    val toImage = CatalystTypeConverters.createToScalaConverter(ImageDebugSource.imageSchema)
+    val toImage = ExpressionEncoder[SparkImage]().resolveAndBind().createDeserializer()
+    val base = new Path(dir)
+    val fs = base.getFileSystem(conf.value)
     new DataWriter[InternalRow] {
       override def write(row: InternalRow): Unit = {
         if (row.isNullAt(imageIdx)) return
         val name = row.getUTF8String(nameIdx).toString
-        val r = toImage(row.getStruct(imageIdx, imageFields))
-          .asInstanceOf[org.apache.spark.sql.Row]
-        val meta = r.getStruct(0)
-        val img = graft.core.SparkImage(
-          graft.core.ImageMeta(meta.getDouble(0), meta.getDouble(1), meta.getDouble(2),
-            meta.getDouble(3), meta.getDouble(4), meta.getDouble(5), meta.getDouble(6),
-            meta.getDouble(7), meta.getString(8), meta.getString(9), meta.getString(10),
-            meta.getString(11), meta.getString(12), meta.getString(13),
-            meta.getSeq[Double](14), meta.getSeq[Double](15)),
-          r.getString(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getString(5),
-          r.getAs[Array[Byte]](6))
         val fmt = format.getOrElse {
           val dot = name.lastIndexOf('.')
           if (dot > 0) name.substring(dot + 1) else "png"
         }
-        // same sanitization as ImageOps.saveImages: flat files only, and
-        // never a leading "_"/"." (Spark's file index hides those)
-        val safe = name.replaceAll("[^A-Za-z0-9._-]", "_")
-          .replaceAll("^[_.]+", "") match {
-            case "" => "img"
-            case s => s
-          }
-        val file = if (safe.contains('.')) safe else s"$safe.$fmt"
-        val out = java.nio.file.Paths.get(dir, file)
-        java.nio.file.Files.createDirectories(out.getParent)
-        java.nio.file.Files.write(out, ImageCodecIO.encode(img, fmt))
+        val safe = ImageOps.safeName(name)
+        val os = fs.create(new Path(base, if (safe.contains('.')) safe else s"$safe.$fmt"), true)
+        try os.write(ImageCodecIO.encode(toImage(row.getStruct(imageIdx, imageFields)), fmt))
+        finally os.close()
       }
       override def commit(): WriterCommitMessage = new WriterCommitMessage {}
       override def abort(): Unit = ()
@@ -158,42 +173,68 @@ class ImageDirScan(options: Map[String, String], required: StructType)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = ImageDirSource.listFiles(
+  // planning copies the scan's exec node several times, and each copy
+  // asks for the partitions and the reader factory: list the directory
+  // and ship the Hadoop configuration once per scan
+  private lazy val partitions: Array[InputPartition] = {
+    val spark = SparkSession.active
+    val files = ImageDirSource.listFiles(spark,
       options.getOrElse("path", "."),
       options.getOrElse("pattern", ".*\\.(png|gif|bmp)")).toArray
-    val parts = math.max(1, math.min(options.getOrElse("partitions", "8").toInt,
-      math.max(1, files.length)))
+    val parts = math.max(1, math.min(
+      options.get("partitions").map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism),
+      files.length))
     Array.tabulate[InputPartition](parts) { p =>
-      ImageDirPartition((p until files.length by parts).map(files).toArray)
+      val mine = (p until files.length by parts).map(files)
+      ImageDirPartition(mine.map(_._1).toArray, mine.map(_._2).toArray)
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ImageDirReaderFactory(required)
+  // only `content` and `image` open files; a metadata scan skips the
+  // broadcast (about 100 KB of configuration)
+  private lazy val readerFactory: PartitionReaderFactory = {
+    val sc = SparkSession.active.sparkContext
+    new ImageDirReaderFactory(required,
+      if (!required.fieldNames.exists(Set("content", "image"))) None
+      else Some(sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))))
+  }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 }
 
-case class ImageDirPartition(files: Array[String]) extends InputPartition
+case class ImageDirPartition(files: Array[String], sizes: Array[Long]) extends InputPartition
 
-class ImageDirReaderFactory(required: StructType) extends PartitionReaderFactory {
+class ImageDirReaderFactory(required: StructType,
+                            conf: Option[Broadcast[SerializableConfiguration]])
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val files = partition.asInstanceOf[ImageDirPartition].files
+    val part = partition.asInstanceOf[ImageDirPartition]
     new PartitionReader[InternalRow] {
       private var i = -1
       private val fieldNames = required.fieldNames
       private val converter = CatalystTypeConverters.createToCatalystConverter(required)
 
-      override def next(): Boolean = { i += 1; i < files.length }
+      override def next(): Boolean = { i += 1; i < part.files.length }
 
       override def get(): InternalRow = {
-        val path = files(i)
-        val nio = java.nio.file.Paths.get(path)
+        val path = part.files(i)
+        val size = part.sizes(i)
+        // bytes are read only when `content` or `image` is required
+        lazy val content: Array[Byte] = {
+          require(size <= Int.MaxValue - 8, s"image file too large ($size bytes): $path")
+          val p = new Path(path)
+          val in = p.getFileSystem(conf.get.value.value).open(p)
+          val bytes = new Array[Byte](size.toInt)
+          try in.readFully(0L, bytes) finally in.close()
+          bytes
+        }
         val values: Seq[Any] = fieldNames.toSeq.map {
           case "path" => path
-          case "name" => nio.getFileName.toString
-          case "size" => java.nio.file.Files.size(nio)
-          case "image" => // only decoded when the column is required
-            ImageCodecIO.decode(path, java.nio.file.Files.readAllBytes(nio))
+          case "name" => path.substring(path.lastIndexOf('/') + 1)
+          case "size" => size
+          case "content" => content
+          case "image" => ImageCodecIO.decode(path, content)
           case other => throw new IllegalArgumentException(s"unknown column $other")
         }
         converter(org.apache.spark.sql.Row.fromSeq(values)).asInstanceOf[InternalRow]

@@ -97,6 +97,7 @@ class SqlSurfaceSpec extends AnyFunSuite with Matchers {
 
   test("imagedir scan deals sorted files round-robin: files that sort together spread out") {
     import graft.sources.{ImageDirPartition, ImageDirScan, ImageDirSource}
+    spark // the scan lists through the active session's Hadoop FS
     val dir = java.nio.file.Files.createTempDirectory("graft_dirplan")
     // six files sharing a prefix sort together, as one codec's files do
     val names = (0 until 6).map(i => s"a_j2k_$i.dcm") ++ (0 until 6).map(i => s"b_$i.png")
@@ -108,12 +109,12 @@ class SqlSurfaceSpec extends AnyFunSuite with Matchers {
     val parts = plan()
     parts.length shouldBe 4
     parts.indices.filter(p => parts(p).exists(_.contains("a_j2k_"))).size shouldBe 4
-    parts.flatten.sorted shouldBe names.map(n => dir.resolve(n).toString).sorted
-    parts.head shouldBe Seq(0, 4, 8).map(i => names.map(n => dir.resolve(n).toString).sorted.apply(i))
+    parts.flatten.sorted shouldBe names.map(n => s"file:${dir.resolve(n)}").sorted
+    parts.head shouldBe Seq(0, 4, 8).map(i => names.map(n => s"file:${dir.resolve(n)}").sorted.apply(i))
     plan() shouldBe parts
   }
 
-  test("binaryFiles reads a last-component glob as its directory: glob's rows, no job before the action") {
+  test("imageFiles reads a file-name glob's directory, no job before the action") {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft_glob")
     (0 until 40).foreach(i => Files.write(dir.resolve(f"s_$i%02d.dcm"), Array.fill[Byte](i + 1)(i.toByte)))
@@ -121,9 +122,6 @@ class SqlSurfaceSpec extends AnyFunSuite with Matchers {
     Files.write(dir.resolve("_hidden.dcm"), Array[Byte](3))
     Files.write(Files.createDirectory(dir.resolve("sub")).resolve("s_99.dcm"), Array[Byte](9))
     val glob = s"$dir/*.dcm"
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Seq[Byte])] =
-      df.select("path", "length", "content").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq)).toSeq.sortBy(_._1)
     // jobs by group, read after a marker job: the listener bus delivers
     // events in order, so once the marker is seen every earlier job is
     val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -144,14 +142,31 @@ class SqlSurfaceSpec extends AnyFunSuite with Matchers {
       (df, started.toArray.count(_ == group))
     }
     try {
-      val (globDf, globJobs) = jobsWhileBuilding("graft-glob")(spark.read.format("binaryFile").load(glob))
-      globJobs should be > 0 // above 32 root paths Spark lists with a job
-      val (dirDf, dirJobs) = jobsWhileBuilding("graft-dir")(ImageOps.binaryFiles(spark, glob))
-      dirJobs shouldBe 0
-      val expected = rows(globDf)
-      expected.length shouldBe 40
-      rows(dirDf) shouldBe expected
+      val (df, jobs) = jobsWhileBuilding("graft-dir")(ImageOps.imageFiles(spark, glob))
+      jobs shouldBe 0
+      // notes.txt fails the glob, _hidden.dcm is hidden, sub/ is not a direct child
+      df.select("name", "size", "content").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq)).toSeq
+        .sortBy(_._1) shouldBe
+        (0 until 40).map(i => (f"s_$i%02d.dcm", i + 1L, Seq.fill[Byte](i + 1)(i.toByte)))
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("loadDicomMultiFrame: a name-only projection decodes no file") {
+    import spark.implicits._
+    import graft.core.PixelCodec
+    val dir = java.nio.file.Files.createTempDirectory("graft_mf_names").toString
+    val stacks = spark.range(3L).map { i =>
+      (s"mf_$i", Kernels.constantImage(8, 4, 1, i * 10.0 + 5.0, PixelCodec.Short16),
+        graft.sources.ImageCodecIO.TsExplicitLE, 0)
+    }.toDF("sample", "image", "ts", "planar")
+    ImageOps.saveDicomMultiFrame(stacks, dir)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "bad.dcm"), Array.fill[Byte](64)(7))
+    val df = ImageOps.loadDicomMultiFrame(spark, s"$dir/*.dcm")
+    df.select("name").as[String].collect().sorted shouldBe Array("bad", "mf_0", "mf_1", "mf_2")
+    val e = intercept[Exception](df.select("image").collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("bad.dcm")) shouldBe true
   }
 
   test("runRange parameter sweep fans out rows (scOps.scala:207-224)") {
