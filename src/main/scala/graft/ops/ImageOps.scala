@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Kernels, SparkImage}
@@ -54,19 +54,26 @@ object ImageOps {
   def saveImages(df: DataFrame, dir: String, format: String = "png"): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
+    writeFiles(df.select(col("sample"), col("image")).as[(String, SparkImage)], dir) {
+      case (sample, img) => Iterator.single(s"${safeName(sample)}.$format" -> ImageCodecIO.encode(img, format))
+    }
+  }
+
+  /** The file writer of every sink: each row of `ds` becomes the
+    * (file name, bytes) pairs `files` makes of it, each created or
+    * overwritten under `dir` as [[saveImages]] describes. */
+  private def writeFiles[T](ds: Dataset[T], dir: String)(
+      files: T => Iterator[(String, Array[Byte])]): Unit = {
     val serConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    df.select(col("sample"), col("image"))
-      .as[(String, SparkImage)]
-      .foreachPartition { it: Iterator[(String, SparkImage)] =>
-        val base = new org.apache.hadoop.fs.Path(dir)
-        val fs = base.getFileSystem(serConf.value)
-        it.foreach { case (sample, img) =>
-          val out = new org.apache.hadoop.fs.Path(base, s"${safeName(sample)}.$format")
-          val os = fs.create(out, true)
-          try os.write(ImageCodecIO.encode(img, format)) finally os.close()
-        }
+      ds.sparkSession.sparkContext.hadoopConfiguration)
+    ds.foreachPartition { it: Iterator[T] =>
+      val base = new org.apache.hadoop.fs.Path(dir)
+      val fs = base.getFileSystem(serConf.value)
+      it.flatMap(files).foreach { case (name, bytes) =>
+        val os = fs.create(new org.apache.hadoop.fs.Path(base, name), true)
+        try os.write(bytes) finally os.close()
       }
+    }
   }
 
   // never emit a leading "_" or "." — Spark's file index treats those
@@ -124,25 +131,12 @@ object ImageOps {
     require(syntaxes.nonEmpty, "at least one transfer syntax")
     val spark = df.sparkSession
     import spark.implicits._
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    df.select(col("sample"), col("image"))
-      .as[(String, SparkImage)]
-      .foreachPartition { it: Iterator[(String, SparkImage)] =>
-        val base = new org.apache.hadoop.fs.Path(dir)
-        val fs = base.getFileSystem(serConf.value)
-        it.foreach { case (sample, img) =>
-          var s = 0
-          while (s < img.slices) {
-            val out = new org.apache.hadoop.fs.Path(base, s"${safeName(sample)}_${s + 1}.dcm")
-            val os = fs.create(out, true)
-            try os.write(ImageCodecIO.encodeDicom(img, instance = s + 1, slice = s,
-              transferSyntax = syntaxes(s % syntaxes.length)))
-            finally os.close()
-            s += 1
-          }
-        }
+    writeFiles(df.select(col("sample"), col("image")).as[(String, SparkImage)], dir) {
+      case (sample, img) => Iterator.range(0, img.slices).map { s =>
+        s"${safeName(sample)}_${s + 1}.dcm" -> ImageCodecIO.encodeDicom(img, instance = s + 1,
+          slice = s, transferSyntax = syntaxes(s % syntaxes.length))
       }
+    }
   }
 
   /** Series-glob DICOM load: decode every matching single-frame file,
@@ -195,8 +189,6 @@ object ImageOps {
     val spark = df.sparkSession
     import spark.implicits._
     requireUniqueSafeNames(df, "saveDicomMultiFrame")
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
     // optional columns, all defaulted when absent:
     //   photometric  — RGB / YBR_FULL / YBR_FULL_422 / MONOCHROME1
     //   frag_bytes   — split each encapsulated frame's codec stream
@@ -210,7 +202,7 @@ object ImageOps {
     // present one (a bare null would fail the primitive-tuple encoder)
     def opt(name: String, default: Column): Column =
       if (df.columns.contains(name)) coalesce(col(name), default) else default
-    df.select(col("sample"), col("image"), col("ts"), col("planar"),
+    val rows = df.select(col("sample"), col("image"), col("ts"), col("planar"),
         opt("photometric", lit("RGB")).as("photometric"),
         opt("frag_bytes", lit(0)).cast("int").as("frag_bytes"),
         opt("pixel_rep", lit(0)).cast("int").as("pixel_rep"),
@@ -219,26 +211,19 @@ object ImageOps {
         opt("j2k_tile", lit(0)).cast("int").as("j2k_tile"),
         opt("jls_ilv", lit(1)).cast("int").as("jls_ilv"))
       .as[(String, SparkImage, String, Int, String, Int, Int, Double, Double, Int, Int)]
-      .foreachPartition { it: Iterator[(String, SparkImage, String, Int, String, Int, Int, Double, Double, Int, Int)] =>
-        val base = new org.apache.hadoop.fs.Path(dir)
-        val fs = base.getFileSystem(serConf.value)
-        it.foreach { case (sample, img, ts, planar, pm, fb, pr, sl, ic, jt, jlsIlv) =>
-          // the modality LUT is a PAIR: exactly one of slope/intercept
-          // set would silently drop the LUT (or write a NaN tag) —
-          // reject loudly instead
-          require(sl.isNaN == ic.isNaN,
-            s"saveDicomMultiFrame($sample): slope and intercept must be " +
-              "set together (one without the other has no defined LUT)")
-          val rescale = if (sl.isNaN) None else Some((sl, ic))
-          val out = new org.apache.hadoop.fs.Path(base, s"${safeName(sample)}.dcm")
-          val os = fs.create(out, true)
-          try os.write(ImageCodecIO.encodeDicom(img, instance = 1, slice = 0,
-            transferSyntax = ts, frames = img.slices, planarConfig = planar,
-            photometric = pm, fragmentBytes = fb, pixelRep = pr,
-            rescale = rescale, j2kTile = jt, jlsIlv = jlsIlv))
-          finally os.close()
-        }
-      }
+    writeFiles(rows, dir) { case (sample, img, ts, planar, pm, fb, pr, sl, ic, jt, jlsIlv) =>
+      // the modality LUT is a PAIR: exactly one of slope/intercept
+      // set would silently drop the LUT (or write a NaN tag) —
+      // reject loudly instead
+      require(sl.isNaN == ic.isNaN,
+        s"saveDicomMultiFrame($sample): slope and intercept must be " +
+          "set together (one without the other has no defined LUT)")
+      val rescale = if (sl.isNaN) None else Some((sl, ic))
+      Iterator.single(s"${safeName(sample)}.dcm" -> ImageCodecIO.encodeDicom(img, instance = 1,
+        slice = 0, transferSyntax = ts, frames = img.slices, planarConfig = planar,
+        photometric = pm, fragmentBytes = fb, pixelRep = pr,
+        rescale = rescale, j2kTile = jt, jlsIlv = jlsIlv))
+    }
   }
 
   /** PALETTE COLOR DICOM sink: each (sample, image, ts) row writes one
@@ -254,22 +239,12 @@ object ImageOps {
     val spark = df.sparkSession
     import spark.implicits._
     requireUniqueSafeNames(df, "saveDicomPalette")
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    df.select(col("sample"), col("image"), col("ts"))
-      .as[(String, SparkImage, String)]
-      .foreachPartition { it: Iterator[(String, SparkImage, String)] =>
-        val base = new org.apache.hadoop.fs.Path(dir)
-        val fs = base.getFileSystem(serConf.value)
-        it.foreach { case (sample, img, ts) =>
-          val out = new org.apache.hadoop.fs.Path(base, s"${safeName(sample)}.dcm")
-          val os = fs.create(out, true)
-          try os.write(ImageCodecIO.encodeDicom(img, instance = 1, slice = 0,
-            transferSyntax = ts, frames = img.slices,
-            palette = Some((lutR, lutG, lutB, firstMapped))))
-          finally os.close()
-        }
-      }
+    writeFiles(df.select(col("sample"), col("image"), col("ts")).as[(String, SparkImage, String)], dir) {
+      case (sample, img, ts) =>
+        Iterator.single(s"${safeName(sample)}.dcm" -> ImageCodecIO.encodeDicom(img, instance = 1,
+          slice = 0, transferSyntax = ts, frames = img.slices,
+          palette = Some((lutR, lutG, lutB, firstMapped))))
+    }
   }
 
   /** Multi-frame DICOM load: each FILE is a whole stack (frames →

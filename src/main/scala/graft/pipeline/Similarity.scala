@@ -142,7 +142,7 @@ object Similarity {
     *
     * Scale shape: the attribute predicate sits directly on the corpus
     * scan, so it reaches the parquet reader as a pushed filter /
-    * row-group prune (PlanAudit asserts `PushedFilters` carries it) —
+    * row-group prune (PlanShapeSpec asserts `PushedFilters` carries it) —
     * at 100 TB a selective attribute cuts the scanned bytes BEFORE any
     * vector math runs, which is why pre-filtering beats post-filtering
     * an unfiltered ANN result (post-filtering also breaks the top-k
@@ -840,7 +840,7 @@ object Similarity {
     * static `IN` filter. That filter is the storage-layer lever: when
     * the index was persisted `partitionBy("cluster")` (the q167
     * layout) it lands in the scan's PartitionFilters and Spark skips
-    * the non-probed posting lists' FILES (PlanAudit asserts it) —
+    * the non-probed posting lists' FILES (PlanShapeSpec asserts it) —
     * without it the cluster equi-join still discards those rows, but
     * only AFTER reading them, and at 100 TB the nProbe/nClusters scan
     * reduction is the whole point of IVF. Note the serve DataFrame is

@@ -876,7 +876,7 @@ object Relational {
     // per-key aggregation is then exchange-free: the bucketed scans
     // report hashpartitioning(orderkey, 8), SortMergeJoin consumes it
     // directly, and the per-orderkey aggregate reuses it again.
-    // PlanAudit asserts the join+agg plan contains NO Exchange node of
+    // PlanShapeSpec asserts the join+agg plan contains NO Exchange node of
     // any kind. The oracle is the plain (shuffling) join in DuckDB —
     // proof that co-location changes the plan, not the answer. ---------
     ("q101_bucketed_join",
@@ -935,7 +935,7 @@ object Relational {
     // for a 100 TB time-series lake); a one-month query then touches
     // ONE directory — the filter resolves against the file index
     // (PartitionFilters in the scan), zero data files from other
-    // months are opened, let alone read. PlanAudit asserts the
+    // months are opened, let alone read. PlanShapeSpec asserts the
     // PartitionFilters entry. The oracle filters the unpartitioned
     // table — layout changes the IO, not the answer. -------------------
     ("q105_partition_pruning",

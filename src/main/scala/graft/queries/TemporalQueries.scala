@@ -109,7 +109,7 @@ object TemporalQueries {
     // RangeJoinRewrite optimizer rule (installed here via
     // experimental.extraOptimizations; via GraftExtensions in
     // configured deployments) rewrites it to the bucketized equi-join
-    // — PlanAudit asserts no BroadcastNestedLoopJoin survives. Same
+    // — PlanShapeSpec asserts no BroadcastNestedLoopJoin survives. Same
     // oracle as q62: the rewrite must not change a single row ---------
     ("q73_range_join_auto",
       (s, dir) => {

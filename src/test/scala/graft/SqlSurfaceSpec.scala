@@ -254,6 +254,44 @@ class SqlSurfaceSpec extends AnyFunSuite with Matchers {
     sts.foreach(_ shouldBe 255.0)
   }
 
+  test("saveDicomSeries + loadDicomSeries round-trips a 3-slice 16-bit stack") {
+    import spark.implicits._
+    import graft.core.{PixelCodec, SparkImage}
+    val dir = java.nio.file.Files.createTempDirectory("graft_series_rt").toString
+    // every slice spans the full unsigned 16-bit range, both byte orders matter
+    val px = Array.tabulate(3 * 12 * 8)(i => ((i * 40503L + 17) % 65536).toDouble)
+    val stack = Kernels.constantImage(12, 8, 3, 0.0, PixelCodec.Short16).withPixels(px)
+    ImageOps.saveDicomSeries(Seq(("ct/a", stack)).toDF("sample", "image"), dir)
+    val back = ImageOps.loadDicomSeries(spark, s"$dir/*.dcm").as[(String, SparkImage)].collect()
+    back.map(_._1) shouldBe Array("ct_a")
+    val img = back.head._2
+    (img.width, img.height, img.slices, img.pixelType) shouldBe (12, 8, 3, PixelCodec.Short16)
+    img.toDoubles shouldBe px
+  }
+
+  test("saveDicomPalette + loadDicomMultiFrame returns the LUT-expanded RGB") {
+    import spark.implicits._
+    import graft.core.{PixelCodec, SparkImage}
+    import graft.sources.ImageCodecIO
+    val dir = java.nio.file.Files.createTempDirectory("graft_palette_rt").toString
+    // two frames of indices, some below firstMapped and past the LUT's end (both clamp)
+    val idx = Array.tabulate(2 * 6 * 4)(i => ((i * 37) % 270).toDouble)
+    val img = Kernels.constantImage(6, 4, 2, 0.0, PixelCodec.Short16).withPixels(idx)
+    val luts = Seq((5, 11), (7, 23), (11, 37)).map { case (a, b) =>
+      Array.tabulate(256)(i => ((i * a + b) % 256) << 8)
+    }
+    ImageOps.saveDicomPalette(Seq(("pal", img, ImageCodecIO.TsExplicitLE)).toDF("sample", "image", "ts"),
+      dir, luts(0), luts(1), luts(2), firstMapped = 4)
+    val back = ImageOps.loadDicomMultiFrame(spark, s"$dir/*.dcm").as[(String, SparkImage)].collect()
+    back.map(_._1) shouldBe Array("pal")
+    val rgb = back.head._2
+    (rgb.width, rgb.height, rgb.slices, rgb.pixelType) shouldBe (6, 4, 2, PixelCodec.Rgb)
+    rgb.data.toSeq shouldBe idx.toSeq.flatMap { v =>
+      val i = math.min(math.max(v.toInt - 4, 0), 255)
+      luts.map(lut => (lut(i) >> 8).toByte)
+    }
+  }
+
   test("CTAS materializes a derived image table; INSERT INTO appends (IJSqlTest.scala:187-242)") {
     ImageFunctions.registerAll(spark)
     val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
