@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Kernels, SparkImage}
 import graft.functions.ImageFunctions
-import graft.sources.ImageCodecIO
+import graft.sources.{HadoopConfBroadcast, ImageCodecIO}
 
 /** DataFrame-level batch operators mirroring the reference's RDD layer
   * (scOps.scala:184-301), re-expressed as single-plan Catalyst
@@ -49,8 +49,8 @@ object ImageOps {
     * scOps.scala:262-271, plus the reference's Hadoop byte-save,
     * SQLFunctions.scala/scOps saveAsBinaryFile path): `dir` may be any
     * registered scheme — local path, `hdfs://`, `s3a://` — and the
-    * session's Hadoop configuration (credentials, endpoints) is
-    * shipped to the tasks. */
+    * session's Hadoop configuration (credentials, endpoints) reaches
+    * the tasks through the session's one configuration broadcast. */
   def saveImages(df: DataFrame, dir: String, format: String = "png"): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -64,11 +64,10 @@ object ImageOps {
     * overwritten under `dir` as [[saveImages]] describes. */
   private def writeFiles[T](ds: Dataset[T], dir: String)(
       files: T => Iterator[(String, Array[Byte])]): Unit = {
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      ds.sparkSession.sparkContext.hadoopConfiguration)
+    val conf = HadoopConfBroadcast(ds.sparkSession.sparkContext)
     ds.foreachPartition { it: Iterator[T] =>
       val base = new org.apache.hadoop.fs.Path(dir)
-      val fs = base.getFileSystem(serConf.value)
+      val fs = base.getFileSystem(conf.value.value)
       it.flatMap(files).foreach { case (name, bytes) =>
         val os = fs.create(new org.apache.hadoop.fs.Path(base, name), true)
         try os.write(bytes) finally os.close()
@@ -260,26 +259,23 @@ object ImageOps {
   /** Archive inventory over a DICOM file glob — the cheap first pass
     * a PACS ingest runs before committing to a decode plan: per
     * transfer syntax, how many files / series / instances and what
-    * geometry. Reads ONLY each file's Part 10 meta group plus the
-    * header elements (the full decode also runs here to surface
-    * geometry — at inventory time one would swap it for the
-    * header-only walk; both are per-file map work on the distributed
-    * `imagedir` scan's `content`, no shuffle beyond the final syntax-count agg,
-    * which is bounded by the handful of registered syntaxes). */
+    * geometry. Reads ONLY each file's header, up to the PixelData tag
+    * ([[ImageCodecIO.dicomHeader]]), and refuses what a decode would
+    * refuse on the header alone (unsupported syntax, missing dims,
+    * bad bit depth, frame count, photometric, sample, sign or palette
+    * rules); no pixel is decoded. Per-file map work on the distributed
+    * `imagedir` scan's `content`, no shuffle beyond the final
+    * syntax-count agg, which is bounded by the handful of registered
+    * syntaxes. */
   def dicomCensus(spark: SparkSession, pathGlob: String): DataFrame = {
-    val syntax = udf { (path: String, content: Array[Byte]) =>
-      ImageCodecIO.dicomTransferSyntax(path, content)
-    }
-    val decode = udf { (path: String, content: Array[Byte]) =>
-      ImageCodecIO.decodeDicomWithInstance(path, content)
+    val header = udf { (path: String, content: Array[Byte]) =>
+      val h = ImageCodecIO.dicomHeader(path, content)
+      (h.ts, h.instance, h.cols, h.rows)
     }
     imageFiles(spark, pathGlob)
-      .select(col("name"),
-        syntax(col("path"), col("content")).as("ts"),
-        decode(col("path"), col("content")).as("d"))
-      .select(col("ts"), regexp_replace(col("name"), "_\\d+\\.dcm$", "").as("series"),
-        col("d._2").as("inst"),
-        col("d._1.width").as("w"), col("d._1.height").as("h"))
+      .select(col("name"), header(col("path"), col("content")).as("d"))
+      .select(col("d._1").as("ts"), regexp_replace(col("name"), "_\\d+\\.dcm$", "").as("series"),
+        col("d._2").as("inst"), col("d._3").as("w"), col("d._4").as("h"))
       .groupBy(col("ts"))
       .agg(count(lit(1)).as("n_files"),
         countDistinct(col("series")).as("n_series"),

@@ -285,6 +285,27 @@ object ImageQueries {
       .toDF("sample", "image")
   }
 
+  /** `dicomCensus` of the DICOM files in `dir`, with `sum_w`/`sum_h`
+    * taken from the `imagedir` scan's decoded `image`, grouped by each
+    * file's declared syntax: the census reads headers only, so this is
+    * what keeps a syntax's decoder inside the oracle gate. A decode
+    * that throws fails the query; one that returns the wrong geometry
+    * flips a row. */
+  private def decodedCensus(s: SparkSession, dir: String): DataFrame = {
+    import graft.ops.ImageOps
+    val glob = s"$dir/*.dcm"
+    val syntax = udf { (path: String, content: Array[Byte]) =>
+      graft.sources.ImageCodecIO.dicomTransferSyntax(path, content)
+    }
+    val decoded = ImageOps.imageFiles(s, glob)
+      .select(syntax(col("path"), col("content")).as("ts"), col("image"))
+      .groupBy(col("ts"))
+      .agg(sum(col("image.width")).cast("long").as("sum_w"),
+        sum(col("image.height")).cast("long").as("sum_h"))
+    ImageOps.dicomCensus(s, glob).drop("sum_w", "sum_h").join(decoded, "ts")
+      .orderBy(col("ts"))
+  }
+
   val entries: List[(String, Q, Option[String])] = List(
 
     // SELECT sample, stats(image) FROM Images (IJSqlTest.scala:89)
@@ -785,11 +806,12 @@ object ImageQueries {
     // Pixel values perturb under DCT quantization / NEAR binning —
     // which is exactly why the GATE rides the census METADATA
     // (file/series/instance/geometry), deterministic regardless of
-    // pixel loss, while the census's full decode still exercises all
-    // three lossy decode paths end-to-end: a broken SOF1 parse, a
-    // mis-sized frame, or a bad instance header flips a row even
-    // though no pixel is hashed. Pixel-error bounds live in
-    // PropertySpec (|err| ≤ NEAR exactly for .81). -------------------
+    // pixel loss. The header-only census decodes nothing, so the
+    // geometry sums come from each file's decoded image
+    // (`decodedCensus`): all three lossy decode paths still run
+    // end-to-end, and a broken SOF1 parse or a mis-sized frame throws
+    // or flips a row even though no pixel is hashed. Pixel-error
+    // bounds live in PropertySpec (|err| ≤ NEAR exactly for .81). ----
     ("img22_dicom_lossy_census",
       (s, _) => {
         import s.implicits._
@@ -806,7 +828,7 @@ object ImageQueries {
         ImageOps.saveDicomSeriesWith(stacks, dir, Array(
           "1.2.840.10008.1.2.4.50", "1.2.840.10008.1.2.4.51",
           "1.2.840.10008.1.2.4.81"))
-        ImageOps.dicomCensus(s, s"$dir/*.dcm").orderBy(col("ts"))
+        decodedCensus(s, dir)
       },
       // 6 instances rotate through 3 syntaxes: syntax j holds
       // instances {j+1, j+4} of both series
@@ -1412,11 +1434,12 @@ object ImageQueries {
     // ---- LOSSY JPEG 2000 (.91, irreversible 9/7) census: like
     // img22's lossy-census family, the GATE rides the metadata
     // (syntax/series/instances/geometry — deterministic regardless of
-    // quantization noise) while the census's full decode exercises
-    // the float-wavelet path end to end: a bad QCD-style parse, a
-    // mis-scaled lifting step, or a broken dequantization throws and
-    // flips a row. Instances rotate .91 / .90 so the irreversible and
-    // reversible decoders co-exist within one series. ---------------
+    // quantization noise) while the geometry sums come from the
+    // decoded images (`decodedCensus`), which runs the float-wavelet
+    // path end to end: a bad QCD-style parse, a mis-scaled lifting
+    // step, or a broken dequantization throws and flips a row.
+    // Instances rotate .91 / .90 so the irreversible and reversible
+    // decoders co-exist within one series. ---------------------------
     ("img31_dicom_j2k_lossy_census",
       (s, _) => {
         import s.implicits._
@@ -1435,7 +1458,7 @@ object ImageQueries {
         }.toDF("sample", "image")
         ImageOps.saveDicomSeriesWith(stacks, dir, Array(
           ImageCodecIO.TsJpeg2000, ImageCodecIO.TsJpeg2000Lossless))
-        ImageOps.dicomCensus(s, s"$dir/*.dcm").orderBy(col("ts"))
+        decodedCensus(s, dir)
       },
       // instance s+1 takes syntaxes[s % 2]: odd instances .91, even
       // .90 — 2 series × 3 files per syntax of 32x16 frames

@@ -603,27 +603,42 @@ object ImageCodecIO {
     (w, h, out)
   }
 
-  /** Read ONLY the Part 10 file-meta group and return the
-    * TransferSyntaxUID — the cheap first pass of an archive
-    * inventory (no pixel decode, no dataset walk; bytes beyond the
-    * meta group are never touched). */
-  private[graft] def dicomTransferSyntax(path: String, bytes: Array[Byte]): String = {
-    require(isDicom(bytes), s"not a DICOM Part 10 file: $path")
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+  private val LongVrs = Set("OB", "OW", "OF", "SQ", "UT", "UN")
+
+  /** The value length of the data element whose tag was just read,
+    * leaving `bb` at the value: implicit VR carries a 4-byte length,
+    * explicit VR a 2-byte one, or 2 reserved bytes and a 4-byte one
+    * after the long VRs. -1 is the undefined length. */
+  private def elementLength(bb: java.nio.ByteBuffer, explicitVr: Boolean): Int =
+    if (!explicitVr) bb.getInt
+    else {
+      val vr = new String(Array(bb.get(), bb.get()).map(b => b.toChar))
+      if (LongVrs(vr)) { bb.getShort(); bb.getInt() } else bb.getShort & 0xffff
+    }
+
+  /** The `len`-byte element value at `bb`'s position; `corrupt` names
+    * the reject for an undefined length or one past the end. */
+  private def elementValue(bb: java.nio.ByteBuffer, len: Int, corrupt: => String): Array[Byte] = {
+    require(len >= 0 && len <= bb.remaining, corrupt)
+    val value = new Array[Byte](len); bb.get(value)
+    value
+  }
+
+  /** Walk the Part 10 file-meta group, which is always explicit-VR
+    * little-endian, and return its TransferSyntaxUID; `bb` is left at
+    * the first dataset element. */
+  private def readMetaGroup(bb: java.nio.ByteBuffer, path: String): String = {
+    require(isDicom(bb.array), s"not a DICOM Part 10 file: $path")
     bb.position(132)
-    val longVRs = Set("OB", "OW", "OF", "SQ", "UT", "UN")
     var ts: String = null
     var inMeta = true
     while (inMeta && bb.remaining >= 8) {
       bb.mark()
-      val group = bb.getShort & 0xffff
-      if (group != 0x0002) { bb.reset(); inMeta = false }
+      if ((bb.getShort & 0xffff) != 0x0002) { bb.reset(); inMeta = false }
       else {
         val elem = bb.getShort & 0xffff
-        val vr = new String(Array(bb.get(), bb.get()).map(b => b.toChar))
-        val len = if (longVRs(vr)) { bb.getShort(); bb.getInt() } else bb.getShort & 0xffff
-        require(len >= 0 && len <= bb.remaining, s"corrupt DICOM meta length in $path")
-        val value = new Array[Byte](len); bb.get(value)
+        val value = elementValue(bb, elementLength(bb, explicitVr = true),
+          s"corrupt DICOM meta length in $path")
         if (elem == 0x0010) ts = new String(value, "US-ASCII").trim
       }
     }
@@ -631,38 +646,56 @@ object ImageCodecIO {
     ts
   }
 
-  /** Minimal DICOM decode — unsigned MONOCHROME2 (8/16-bit) or 8-bit
-    * RGB (SamplesPerPixel 3, PlanarConfiguration 0/1), single- OR
-    * multi-frame (NumberOfFrames (0028,0008): native syntaxes store
-    * frames contiguously in one PixelData, encapsulated syntaxes one
-    * fragment per frame with the BOT marking frame starts), in any of
-    * the ten supported transfer syntaxes
-    * ([[TsImplicitLE]]/[[TsExplicitLE]]/[[TsExplicitBE]]/[[TsRle]]/
-    * [[TsJpegLossless]]/[[TsJpegLossless14]]/[[TsJpegBaseline]]/
-    * [[TsJpegExtended]]/[[TsJpegLs]]/[[TsJpeg2000Lossless]]) —
-    * the shape of the reference's flagship IO case (a CT series
-    * stacked into a volume, IjRDDTests.scala:30-99, where spark-scifio
-    * does the decode — SCIFIO also reads multi-frame and color
-    * objects, which is why both shapes live here). RGB rides the
-    * native syntaxes + RLE (3 PackBits planes); the JPEG-family
-    * syntaxes stay single-component and reject color loudly. Frames
-    * become slices in frame order. The file-meta group (0002,xxxx) is
-    * always explicit-VR little-endian per Part 10; its
-    * TransferSyntaxUID then selects the element encoding, byte order,
-    * and the encapsulated-fragment pixel path. Any OTHER compressed
-    * syntax, signed data, or unsupported photometric interpretation
-    * is rejected loudly rather than mis-decoded. Returns the image
-    * plus the InstanceNumber (slice position for series stacking; 1
-    * when absent). */
-  private[graft] def decodeDicomWithInstance(path: String, bytes: Array[Byte]): (SparkImage, Int) = {
+  /** Read ONLY the Part 10 file-meta group and return the
+    * TransferSyntaxUID (no dataset walk; bytes beyond the meta group
+    * are never touched). */
+  private[graft] def dicomTransferSyntax(path: String, bytes: Array[Byte]): String =
+    readMetaGroup(java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN), path)
+
+  /** What a DICOM file's header says about its pixel data: the
+    * TransferSyntaxUID, the image pixel module, InstanceNumber, the
+    * modality LUT and the palette LUTs, and `pixelData`, the offset
+    * just past the PixelData (7FE0,0010) tag, where the pixel stage
+    * goes on reading (-1 when the file has no PixelData). */
+  private[graft] final case class DicomHeader(
+      ts: String, rows: Int, cols: Int, frames: Int, instance: Int,
+      bits: Int, bitsStored: Int, samples: Int, photometric: String, planar: Int,
+      pixelRep: Int, rescaleSlope: Option[Double], rescaleIntercept: Option[Double],
+      lutDesc: IndexedSeq[Array[Int]], lutRaw: IndexedSeq[Array[Byte]], pixelData: Int) {
+    def explicitVr: Boolean = ts != TsImplicitLE
+    def bigEndian: Boolean = ts == TsExplicitBE
+    def encapsulated: Boolean = ts != TsImplicitLE && ts != TsExplicitLE && ts != TsExplicitBE
+    def isRgb: Boolean = samples == 3
+    def is422: Boolean = photometric == "YBR_FULL_422"
+    def signed: Boolean = pixelRep == 1
+    def hasRescale: Boolean = rescaleSlope.nonEmpty || rescaleIntercept.nonEmpty
+  }
+
+  /** The header walk: the meta group, then the dataset elements in the
+    * syntax's encoding and byte order up to the PixelData tag, which
+    * it does not read past. Runs every reject of [[decodeDicomWithInstance]]
+    * that reads only header fields (syntax, geometry, photometric,
+    * sample, sign, rescale and palette rules), so an archive census
+    * reads what a decode would accept without decoding a pixel. */
+  private[graft] def dicomHeader(path: String, bytes: Array[Byte]): DicomHeader = {
     val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.position(132)
-    val longVRs = Set("OB", "OW", "OF", "SQ", "UT", "UN")
+    val ts = readMetaGroup(bb, path)
+    ts match {
+      case TsImplicitLE | TsExplicitLE | TsExplicitBE | TsRle | TsJpegLossless |
+           TsJpegLossless14 | TsJpegBaseline | TsJpegExtended | TsJpegLs | TsJpegLsNear |
+           TsJpeg2000Lossless | TsJpeg2000 => ()
+      case other => throw new IllegalArgumentException(
+        s"unsupported DICOM transfer syntax $other in $path " +
+          "(implicit-VR LE / explicit-VR LE / explicit-VR BE / RLE Lossless / " +
+          "JPEG Lossless (.57/.70) / JPEG Baseline / JPEG Extended (.51) / " +
+          "JPEG-LS (.80/.81) / JPEG 2000 Lossless only)")
+    }
+    val explicitVr = ts != TsImplicitLE
+    val bigEndian = ts == TsExplicitBE
+    if (bigEndian) bb.order(java.nio.ByteOrder.BIG_ENDIAN)
     var rows = 0; var cols = 0; var bits = 16; var pixelRep = 0; var instance = 1
     var samples = 1; var photometric = "MONOCHROME2"; var planar = 0; var frames = 1
     var bitsStored = 0 // (0028,0101); 0 = absent, defaults to BitsAllocated
-    var ts = TsExplicitLE
-    var px: Array[Byte] = null
     // PALETTE COLOR state: Red/Green/Blue Palette Color Lookup Table
     // Descriptor (0028,1101-1103, three US values each) and Data
     // (0028,1201-1203, OW words in the dataset byte order)
@@ -680,60 +713,13 @@ object ImageCodecIO {
         case _: NumberFormatException => throw new IllegalArgumentException(
           s"unparseable $what DS value '$s' in $path")
       }
-    // ---- file-meta group: ALWAYS explicit-VR little-endian ----
-    var inMeta = true
-    while (inMeta && bb.remaining >= 8) {
-      bb.mark()
-      val group = bb.getShort & 0xffff
-      if (group != 0x0002) { bb.reset(); inMeta = false }
-      else {
-        val elem = bb.getShort & 0xffff
-        val vr = new String(Array(bb.get(), bb.get()).map(b => b.toChar))
-        val len = if (longVRs(vr)) { bb.getShort(); bb.getInt() } else bb.getShort & 0xffff
-        require(len >= 0 && len <= bb.remaining, s"corrupt DICOM meta length in $path")
-        val value = new Array[Byte](len); bb.get(value)
-        if (elem == 0x0010) ts = new String(value, "US-ASCII").trim
-      }
-    }
-    val (explicitVr, bigEndian, encapsulated) = ts match {
-      case TsImplicitLE => (false, false, false)
-      case TsExplicitLE => (true, false, false)
-      case TsExplicitBE => (true, true, false)
-      case TsRle | TsJpegLossless | TsJpegLossless14 | TsJpegBaseline | TsJpegExtended |
-           TsJpegLs | TsJpegLsNear | TsJpeg2000Lossless | TsJpeg2000 =>
-        (true, false, true)
-      case other => throw new IllegalArgumentException(
-        s"unsupported DICOM transfer syntax $other in $path " +
-          "(implicit-VR LE / explicit-VR LE / explicit-VR BE / RLE Lossless / " +
-          "JPEG Lossless (.57/.70) / JPEG Baseline / JPEG Extended (.51) / " +
-          "JPEG-LS (.80/.81) / JPEG 2000 Lossless only)")
-    }
-    if (bigEndian) bb.order(java.nio.ByteOrder.BIG_ENDIAN)
-    // ---- dataset: element encoding + byte order per transfer syntax ----
-    var encapFragments: Seq[Array[Byte]] = null
-    var done = false
-    while (!done && bb.remaining >= 8) {
+    var pixelData = -1
+    while (pixelData < 0 && bb.remaining >= 8) {
       val group = bb.getShort & 0xffff; val elem = bb.getShort & 0xffff
-      val len =
-        if (!explicitVr) bb.getInt
-        else {
-          val vr = new String(Array(bb.get(), bb.get()).map(b => b.toChar))
-          if (longVRs(vr)) { bb.getShort(); bb.getInt() } else bb.getShort & 0xffff
-        }
-      if (group == 0x7fe0 && elem == 0x0010 && len == -1) {
-        // encapsulated PixelData: undefined length, fragment items
-        // grouped into one payload per frame via the BOT (frames is
-        // known here: (0028,0008) precedes (7fe0,0010) in tag order)
-        require(encapsulated,
-          s"undefined-length PixelData outside an encapsulated syntax in $path")
-        encapFragments = readEncapsulatedFrames(bb, path,
-          minLen = if (ts == TsRle) 64 else 4, frames = frames,
-          allowMultiFragment = ts != TsRle)
-        done = true
-      } else {
-        require(len >= 0 && len <= bb.remaining,
+      if (group == 0x7fe0 && elem == 0x0010) pixelData = bb.position()
+      else {
+        val value = elementValue(bb, elementLength(bb, explicitVr),
           s"corrupt or undefined DICOM element length in $path")
-        val value = new Array[Byte](len); bb.get(value)
         def u16At(i: Int): Int =
           if (bigEndian) ((value(2 * i) & 0xff) << 8) | (value(2 * i + 1) & 0xff)
           else (value(2 * i) & 0xff) | ((value(2 * i + 1) & 0xff) << 8)
@@ -763,18 +749,24 @@ object ImageCodecIO {
           case (0x0028, 0x1201) => lutRaw(0) = value
           case (0x0028, 0x1202) => lutRaw(1) = value
           case (0x0028, 0x1203) => lutRaw(2) = value
-          case (0x7fe0, 0x0010) => px = value; done = true
           case _ => ()
         }
       }
     }
+    val h = DicomHeader(ts, rows, cols, frames, instance, bits, bitsStored, samples,
+      photometric, planar, pixelRep, rescaleSlope, rescaleIntercept,
+      lutDesc.toIndexedSeq, lutRaw.toIndexedSeq, pixelData)
+    checkDicomHeader(h, path)
+    h
+  }
+
+  /** The rejects that read only header fields: a file that fails one
+    * is refused before any pixel byte is read. */
+  private def checkDicomHeader(h: DicomHeader, path: String): Unit = {
+    import h._
     require(rows > 0 && cols > 0, s"missing DICOM dims: $path")
     require(bits == 8 || bits == 16, s"unsupported DICOM BitsAllocated $bits: $path")
     require(frames >= 1, s"bad DICOM NumberOfFrames $frames: $path")
-    val isRgb = samples == 3
-    val is422 = photometric == "YBR_FULL_422"
-    val signed = pixelRep == 1
-    val hasRescale = rescaleSlope.nonEmpty || rescaleIntercept.nonEmpty
     // signed (PixelRepresentation 1) — the real CT shape (Hounsfield
     // units are signed): two's-complement grayscale, native syntaxes
     require(pixelRep == 0 || pixelRep == 1, s"bad PixelRepresentation $pixelRep: $path")
@@ -820,6 +812,10 @@ object ImageCodecIO {
           photometric == "PALETTE COLOR",
         s"PhotometricInterpretation '$photometric' unsupported for 1-sample data " +
           s"(MONOCHROME2 / MONOCHROME1 / PALETTE COLOR): $path")
+      if (photometric == "MONOCHROME1") {
+        val sb = if (bitsStored > 0) bitsStored else bits
+        require(sb <= bits, s"BitsStored $sb exceeds BitsAllocated $bits: $path")
+      }
       if (photometric == "PALETTE COLOR") {
         require(!signed && !hasRescale,
           s"PALETTE COLOR indices must be unsigned and unrescaled: $path")
@@ -832,8 +828,64 @@ object ImageCodecIO {
             ts != TsJpeg2000,
           s"PALETTE COLOR with the lossy transfer syntax $ts is non-conformant " +
             s"(PS3.5 8.2.1 — index errors become arbitrary colors): $path")
+        lutDesc.zip(lutRaw).foreach { case (d, raw) =>
+          val entries = if (d(0) == 0) 65536 else d(0)
+          require(d(2) == 8 || d(2) == 16,
+            s"palette LUT bits ${d(2)} unsupported (8/16): $path")
+          require(raw.length >= entries * (d(2) / 8), s"short palette LUT data: $path")
+        }
       }
     }
+    if (ts == TsJpegBaseline)
+      require(bits == 8, s"JPEG Baseline with BitsAllocated $bits unsupported: $path")
+    if (ts == TsJpegLossless || ts == TsJpegLossless14)
+      require(bits == 16, s"JPEG lossless with BitsAllocated $bits unsupported: $path")
+    require(pixelData >= 0, s"missing DICOM pixel data: $path")
+  }
+
+  /** Minimal DICOM decode — unsigned MONOCHROME2 (8/16-bit) or 8-bit
+    * RGB (SamplesPerPixel 3, PlanarConfiguration 0/1), single- OR
+    * multi-frame (NumberOfFrames (0028,0008): native syntaxes store
+    * frames contiguously in one PixelData, encapsulated syntaxes one
+    * fragment per frame with the BOT marking frame starts), in any of
+    * the ten supported transfer syntaxes
+    * ([[TsImplicitLE]]/[[TsExplicitLE]]/[[TsExplicitBE]]/[[TsRle]]/
+    * [[TsJpegLossless]]/[[TsJpegLossless14]]/[[TsJpegBaseline]]/
+    * [[TsJpegExtended]]/[[TsJpegLs]]/[[TsJpeg2000Lossless]]) —
+    * the shape of the reference's flagship IO case (a CT series
+    * stacked into a volume, IjRDDTests.scala:30-99, where spark-scifio
+    * does the decode — SCIFIO also reads multi-frame and color
+    * objects, which is why both shapes live here). RGB rides the
+    * native syntaxes + RLE (3 PackBits planes); the JPEG-family
+    * syntaxes stay single-component and reject color loudly. Frames
+    * become slices in frame order. The file-meta group (0002,xxxx) is
+    * always explicit-VR little-endian per Part 10; its
+    * TransferSyntaxUID then selects the element encoding, byte order,
+    * and the encapsulated-fragment pixel path. Any OTHER compressed
+    * syntax, signed data, or unsupported photometric interpretation
+    * is rejected loudly rather than mis-decoded. Returns the image
+    * plus the InstanceNumber (slice position for series stacking; 1
+    * when absent). The header stage is [[dicomHeader]]; the pixel
+    * stage here reads on from its PixelData offset. */
+  private[graft] def decodeDicomWithInstance(path: String, bytes: Array[Byte]): (SparkImage, Int) = {
+    val h = dicomHeader(path, bytes)
+    import h._
+    // ---- pixel stage: the PixelData element, from its length on ----
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(
+      if (bigEndian) java.nio.ByteOrder.BIG_ENDIAN else java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.position(pixelData)
+    val len = elementLength(bb, explicitVr)
+    var px: Array[Byte] = null
+    var encapFragments: Seq[Array[Byte]] = null
+    if (len == -1) {
+      // encapsulated PixelData: undefined length, fragment items
+      // grouped into one payload per frame via the BOT
+      require(encapsulated,
+        s"undefined-length PixelData outside an encapsulated syntax in $path")
+      encapFragments = readEncapsulatedFrames(bb, path,
+        minLen = if (ts == TsRle) 64 else 4, frames = frames,
+        allowMultiFragment = ts != TsRle)
+    } else px = elementValue(bb, len, s"corrupt or undefined DICOM element length in $path")
     val n = rows * cols
     // decode ONE frame's fragment to little-endian interleaved bytes
     // (lo,hi per 16-bit sample; r,g,b per RGB pixel)
@@ -849,7 +901,6 @@ object ImageCodecIO {
         require(bi.getWidth == cols && bi.getHeight == rows,
           s"JPEG frame ${bi.getWidth}x${bi.getHeight} does not match DICOM " +
             s"Rows/Columns ${cols}x$rows in $path")
-        require(bits == 8, s"JPEG Baseline with BitsAllocated $bits unsupported: $path")
         if (samples == 3) {
           // bulk getRGB: one array pass, not n color-model calls
           val packed = bi.getRGB(0, 0, cols, rows, null, 0, cols)
@@ -902,7 +953,6 @@ object ImageCodecIO {
           else if (ts == TsJpegLs || ts == TsJpegLsNear) JpegLsCodec.decode(frag, path)
           else {
             val (w0, h0, v0) = jpegLosslessDecode(frag, path)
-            require(bits == 16, s"JPEG lossless with BitsAllocated $bits unsupported: $path")
             (w0, h0, 16, v0)
           }
         require(jw == cols && jh == rows,
@@ -934,7 +984,6 @@ object ImageCodecIO {
       // 1000-frame objects
       px = Array.concat(encapFragments.map(fragToBytes): _*)
     }
-    require(px != null, s"missing DICOM pixel data: $path")
     // native 422 packs rows of ceil(cols/2) 4-byte Y1Y2CbCr groups
     // (2 bytes/pixel for even cols; odd cols pad the last group);
     // baseline-422 frames were already expanded to interleaved RGB by
@@ -1012,9 +1061,6 @@ object ImageCodecIO {
         val d = lutDesc(c); val raw = lutRaw(c)
         val entries = if (d(0) == 0) 65536 else d(0)
         val first = d(1); val lbits = d(2)
-        require(lbits == 8 || lbits == 16,
-          s"palette LUT bits $lbits unsupported (8/16): $path")
-        require(raw.length >= entries * (lbits / 8), s"short palette LUT data: $path")
         val arr = new Array[Int](entries)
         var i = 0
         if (lbits == 16 && bigEndian)
@@ -1077,7 +1123,6 @@ object ImageCodecIO {
       // MONOCHROME1 (inverted CT) needs.
       if (photometric == "MONOCHROME1") {
         val sb = if (bitsStored > 0) bitsStored else bits
-        require(sb <= bits, s"BitsStored $sb exceeds BitsAllocated $bits: $path")
         val endpointSum = if (signed) -1.0 else ((1 << sb) - 1).toDouble
         i = 0
         while (i < total) { doubles(i) = endpointSum - doubles(i); i += 1 }

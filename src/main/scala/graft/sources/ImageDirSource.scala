@@ -128,19 +128,19 @@ class ImageDirBatchWrite(options: Map[String, String], inputSchema: StructType)
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     ImageDirWriterFactory(options.getOrElse("path", "."), options.get("format"),
       inputSchema.fieldIndex("name"), inputSchema.fieldIndex("image"),
-      new SerializableConfiguration(SparkSession.active.sparkContext.hadoopConfiguration))
+      HadoopConfBroadcast(SparkSession.active.sparkContext))
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 case class ImageDirWriterFactory(dir: String, format: Option[String], nameIdx: Int,
-                                 imageIdx: Int, conf: SerializableConfiguration)
+                                 imageIdx: Int, conf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val imageFields = ImageDebugSource.imageSchema.length
     val toImage = ExpressionEncoder[SparkImage]().resolveAndBind().createDeserializer()
     val base = new Path(dir)
-    val fs = base.getFileSystem(conf.value)
+    val fs = base.getFileSystem(conf.value.value)
     new DataWriter[InternalRow] {
       override def write(row: InternalRow): Unit = {
         if (row.isNullAt(imageIdx)) return
@@ -164,7 +164,10 @@ case class ImageDirWriterFactory(dir: String, format: Option[String], nameIdx: I
 class ImageDirScanBuilder(options: Map[String, String])
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = ImageDirSource.schema
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
+  // nested schema pruning can ask for part of `image` (`image.width`),
+  // but the reader builds the whole struct: keep each column whole
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    required = StructType(requiredSchema.fieldNames.map(ImageDirSource.schema(_)))
   override def build(): Scan = new ImageDirScan(options, required)
 }
 
@@ -175,7 +178,7 @@ class ImageDirScan(options: Map[String, String], required: StructType)
 
   // planning copies the scan's exec node several times, and each copy
   // asks for the partitions and the reader factory: list the directory
-  // and ship the Hadoop configuration once per scan
+  // and build the factory once per scan
   private lazy val partitions: Array[InputPartition] = {
     val spark = SparkSession.active
     val files = ImageDirSource.listFiles(spark,
@@ -190,14 +193,12 @@ class ImageDirScan(options: Map[String, String], required: StructType)
     }
   }
 
-  // only `content` and `image` open files; a metadata scan skips the
-  // broadcast (about 100 KB of configuration)
-  private lazy val readerFactory: PartitionReaderFactory = {
-    val sc = SparkSession.active.sparkContext
+  // only `content` and `image` open files; a metadata scan ships no
+  // configuration
+  private lazy val readerFactory: PartitionReaderFactory =
     new ImageDirReaderFactory(required,
       if (!required.fieldNames.exists(Set("content", "image"))) None
-      else Some(sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))))
-  }
+      else Some(HadoopConfBroadcast(SparkSession.active.sparkContext)))
 
   override def planInputPartitions(): Array[InputPartition] = partitions
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
@@ -206,7 +207,7 @@ class ImageDirScan(options: Map[String, String], required: StructType)
 case class ImageDirPartition(files: Array[String], sizes: Array[Long]) extends InputPartition
 
 class ImageDirReaderFactory(required: StructType,
-                            conf: Option[Broadcast[SerializableConfiguration]])
+                            val conf: Option[Broadcast[SerializableConfiguration]])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val part = partition.asInstanceOf[ImageDirPartition]

@@ -511,6 +511,172 @@ class PropertySpec extends AnyFunSuite with Matchers {
         photometric = "MONOCHROME1")
   }
 
+  test("DICOM header walk: agrees with the full decode on every written shape, and rejects what it rejects") {
+    import graft.core.{ImageLog, ImageMeta, SparkImage}
+    import graft.sources.ImageCodecIO._
+    def gray(w: Int, h: Int, frames: Int, px: Seq[Double], tpe: String = PixelCodec.Short16) =
+      SparkImage(ImageMeta(), ImageLog.create("gen", ""), w, h, frames, tpe,
+        PixelCodec.encode(px.toArray, tpe))
+    def rgb(w: Int, h: Int, frames: Int, px: Seq[Int]) =
+      SparkImage(ImageMeta(), ImageLog.create("gen", ""), w, h, frames, PixelCodec.Rgb,
+        px.map(_.toByte).toArray)
+    val allSyntaxes = Seq(TsImplicitLE, TsExplicitLE, TsExplicitBE, TsRle, TsJpegLossless,
+      TsJpegLossless14, TsJpegBaseline, TsJpegExtended, TsJpegLs, TsJpegLsNear,
+      TsJpeg2000Lossless, TsJpeg2000)
+    val native = Seq(TsImplicitLE, TsExplicitLE, TsExplicitBE)
+    val lossless = native ++ Seq(TsRle, TsJpegLossless, TsJpegLossless14, TsJpegLs,
+      TsJpeg2000Lossless)
+    val geometry = for {
+      w <- Gen.choose(1, 12); h <- Gen.choose(1, 10); frames <- Gen.choose(1, 3)
+      inst <- Gen.choose(1, 999)
+    } yield (w, h, frames, inst)
+    // (syntax written, bytes) per shape; every syntax, multi-frame files included
+    val shapes: Seq[(String, Gen[(String, Array[Byte])])] = Seq(
+      "grayscale" -> (for {
+        (w, h, frames, inst) <- geometry; ts <- Gen.oneOf(allSyntaxes)
+        px <- Gen.listOfN(w * h * frames, Gen.choose(0, 255).map(_.toDouble))
+      } yield ts -> encodeDicom(gray(w, h, frames, px), instance = inst,
+        transferSyntax = ts, frames = frames)),
+      "multi-fragment" -> (for {
+        (w, h, frames, inst) <- geometry
+        ts <- Gen.oneOf(TsJpegLossless, TsJpegLossless14, TsJpegLs, TsJpeg2000Lossless)
+        fragBytes <- Gen.oneOf(16, 64)
+        px <- Gen.listOfN(w * h * frames, Gen.choose(0, 65535).map(_.toDouble))
+      } yield ts -> encodeDicom(gray(w, h, frames, px), instance = inst,
+        transferSyntax = ts, frames = frames, fragmentBytes = fragBytes)),
+      "RGB and YBR_FULL, planar 0 and 1" -> (for {
+        (w, h, frames, inst) <- geometry; ts <- Gen.oneOf(native :+ TsRle)
+        pm <- Gen.oneOf("RGB", "YBR_FULL"); planar <- Gen.oneOf(0, 1)
+        px <- Gen.listOfN(w * h * frames * 3, Gen.choose(0, 255))
+      } yield ts -> encodeDicom(rgb(w, h, frames, px), instance = inst, transferSyntax = ts,
+        frames = frames, planarConfig = planar, photometric = pm)),
+      "encapsulated color" -> (for {
+        (w, h, frames, inst) <- geometry
+        (ts, pm) <- Gen.oneOf((TsJpegBaseline, "YBR_FULL_422"), (TsJpegLs, "RGB"),
+          (TsJpegLsNear, "YBR_FULL"), (TsJpeg2000Lossless, "YBR_RCT"), (TsJpeg2000Lossless, "RGB"))
+        px <- Gen.listOfN(w * h * frames * 3, Gen.choose(0, 255))
+      } yield ts -> encodeDicom(rgb(w, h, frames, px), instance = inst, transferSyntax = ts,
+        frames = frames, photometric = pm)),
+      "YBR_FULL_422" -> (for {
+        (w, h, frames, inst) <- geometry; ts <- Gen.oneOf(native)
+        px <- Gen.listOfN(w * h * frames * 3, Gen.choose(0, 255))
+      } yield ts -> encodeDicom(rgb(w, h, frames, px), instance = inst, transferSyntax = ts,
+        frames = frames, photometric = "YBR_FULL_422")),
+      "palette" -> (for {
+        (w, h, frames, inst) <- geometry; ts <- Gen.oneOf(lossless)
+        px <- Gen.listOfN(w * h * frames, Gen.choose(0, 300).map(_.toDouble))
+      } yield ts -> encodeDicom(gray(w, h, frames, px), instance = inst, transferSyntax = ts,
+        frames = frames, palette = Some((Array.tabulate(256)(_ * 257),
+          Array.tabulate(256)(i => (255 - i) * 257), Array.fill(256)(7 << 8), 4)))),
+      "MONOCHROME1" -> (for {
+        (w, h, frames, inst) <- geometry; ts <- Gen.oneOf(lossless)
+        px <- Gen.listOfN(w * h * frames, Gen.choose(0, 65535).map(_.toDouble))
+      } yield ts -> encodeDicom(gray(w, h, frames, px), instance = inst, transferSyntax = ts,
+        frames = frames, photometric = "MONOCHROME1")),
+      "signed with rescale" -> (for {
+        (w, h, frames, inst) <- geometry; ts <- Gen.oneOf(native)
+        pm <- Gen.oneOf("MONOCHROME1", "MONOCHROME2")
+        stored <- Gen.listOfN(w * h * frames, Gen.choose(-32767, 32767))
+      } yield ts -> encodeDicom(gray(w, h, frames, stored.map(_ * 2.0 - 1024),
+        PixelCodec.Float32), instance = inst, transferSyntax = ts, frames = frames,
+        photometric = pm, pixelRep = 1, rescale = Some((2.0, -1024.0)))))
+    shapes.foreach { case (shape, gen) =>
+      check(s"dicom-header $shape", Prop.forAll(gen) { case (ts, bytes) =>
+        val hdr = dicomHeader("h.dcm", bytes)
+        val (img, inst) = decodeDicomWithInstance("h.dcm", bytes)
+        hdr.ts == ts && (hdr.ts, hdr.cols, hdr.rows, hdr.frames, hdr.instance) ==
+          ((dicomTransferSyntax("h.dcm", bytes), img.width, img.height, img.slices, inst))
+      })
+    }
+
+    // rejects: valid explicit-VR little-endian files with one element
+    // changed (null removes it), walked independently of the codec
+    def withElement(bytes: Array[Byte], group: Int, elem: Int, value: Array[Byte]): Array[Byte] = {
+      def u16(p: Int) = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8)
+      var p = 132
+      var out: Array[Byte] = null
+      while (out == null) {
+        val (g, e) = (u16(p), u16(p + 2))
+        require(!(g == 0x7fe0 && e == 0x0010), f"no ($group%04x,$elem%04x) before PixelData")
+        val vr = new String(bytes.slice(p + 4, p + 6), "US-ASCII")
+        val long = Set("OB", "OW", "OF", "SQ", "UT", "UN")(vr)
+        val (hdr, len) = if (long) (12, java.nio.ByteBuffer.wrap(bytes, p + 8, 4)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt) else (8, u16(p + 6))
+        if (g == group && e == elem) {
+          val element =
+            if (value == null) Array.emptyByteArray
+            else if (long) bytes.slice(p, p + 8) ++ java.nio.ByteBuffer.allocate(4)
+              .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(value.length).array() ++ value
+            else bytes.slice(p, p + 6) ++ Array(value.length.toByte, (value.length >> 8).toByte) ++ value
+          out = bytes.take(p) ++ element ++ bytes.drop(p + hdr + len)
+        }
+        p += hdr + len
+      }
+      out
+    }
+    def us(v: Int*) = v.flatMap(x => Seq(x.toByte, (x >> 8).toByte)).toArray
+    def text(s: String, pad: Char = ' ') =
+      (if (s.length % 2 == 0) s else s + pad).getBytes("US-ASCII")
+    def uid(s: String) = text(s, '\u0000')
+    val g4 = gray(4, 4, 1, Seq.fill(16)(9.0))
+    val mono = encodeDicom(g4)
+    val multi = encodeDicom(gray(4, 4, 2, Seq.fill(32)(9.0)), frames = 2)
+    val color = encodeDicom(rgb(4, 4, 1, Seq.fill(48)(9)))
+    val ybr422 = encodeDicom(rgb(4, 4, 1, Seq.fill(48)(9)), photometric = "YBR_FULL_422")
+    val palette = encodeDicom(g4, palette = Some((Array.fill(16)(1), Array.fill(16)(2),
+      Array.fill(16)(3), 0)))
+    val mono1 = encodeDicom(g4, photometric = "MONOCHROME1")
+    val hu = encodeDicom(gray(4, 4, 1, Seq.fill(16)(-1000.0), PixelCodec.Float32),
+      pixelRep = 1, rescale = Some((1.0, -1024.0)))
+    val rle = encodeDicom(g4, transferSyntax = TsRle)
+    val baseline = encodeDicom(g4, transferSyntax = TsJpegBaseline)
+    val jpegLossless = encodeDicom(g4, transferSyntax = TsJpegLossless)
+    def pixelTag(bytes: Array[Byte]) =
+      bytes.indices.find(i => i >= 132 && bytes.slice(i, i + 4).sameElements(us(0x7fe0, 0x0010))).get
+    val rejects: Seq[(String, Array[Byte])] = Seq(
+      "not DICOM" -> Array.fill[Byte](200)(7),
+      "no TransferSyntaxUID" -> withElement(mono, 0x0002, 0x0010, null),
+      "unsupported syntax" -> withElement(mono, 0x0002, 0x0010, uid("1.2.840.10008.1.2.4.100")),
+      "zero rows" -> withElement(mono, 0x0028, 0x0010, us(0)),
+      "BitsAllocated 12" -> withElement(mono, 0x0028, 0x0100, us(12)),
+      "NumberOfFrames 0" -> withElement(multi, 0x0028, 0x0008, text("0")),
+      "PixelRepresentation 2" -> withElement(mono, 0x0028, 0x0103, us(2)),
+      "signed color" -> withElement(color, 0x0028, 0x0103, us(1)),
+      "signed RLE" -> withElement(rle, 0x0028, 0x0103, us(1)),
+      "SamplesPerPixel 2" -> withElement(mono, 0x0028, 0x0002, us(2)),
+      "grayscale photometric" -> withElement(mono, 0x0028, 0x0004, text("HSV")),
+      "color photometric" -> withElement(color, 0x0028, 0x0004, text("HSV")),
+      "16-bit color" -> withElement(color, 0x0028, 0x0100, us(16)),
+      "rescaled color" -> Seq[Array[Byte] => Array[Byte]](
+        withElement(_, 0x0028, 0x0103, us(0)), withElement(_, 0x0028, 0x0002, us(3)),
+        withElement(_, 0x0028, 0x0004, text("RGB")), withElement(_, 0x0028, 0x0100, us(8)))
+        .foldLeft(hu)((b, f) => f(b)),
+      "color in JPEG Lossless" -> withElement(color, 0x0002, 0x0010, uid(TsJpegLossless)),
+      "PlanarConfiguration 2" -> withElement(color, 0x0028, 0x0006, us(2)),
+      "planar YBR_FULL_422" -> withElement(ybr422, 0x0028, 0x0006, us(1)),
+      "RLE YBR_FULL_422" -> withElement(ybr422, 0x0002, 0x0010, uid(TsRle)),
+      "signed palette" -> withElement(palette, 0x0028, 0x0103, us(1)),
+      "palette without blue data" -> withElement(palette, 0x0028, 0x1203, null),
+      "palette in lossy syntax" -> withElement(palette, 0x0002, 0x0010, uid(TsJpegBaseline)),
+      "palette LUT bits 12" -> withElement(palette, 0x0028, 0x1101, us(16, 0, 12)),
+      "short palette LUT" -> withElement(palette, 0x0028, 0x1202, us(0)),
+      "palette descriptor of 2 values" -> withElement(palette, 0x0028, 0x1102, us(16, 0)),
+      "MONOCHROME1 BitsStored 17" -> withElement(mono1, 0x0028, 0x0101, us(17)),
+      "unparseable RescaleSlope" -> withElement(hu, 0x0028, 0x1053, text("abc")),
+      "16-bit JPEG Baseline" -> withElement(baseline, 0x0028, 0x0100, us(16)),
+      "8-bit JPEG Lossless" -> withElement(jpegLossless, 0x0028, 0x0100, us(8)),
+      "element past the end" -> mono.take(pixelTag(mono) - 1),
+      "no PixelData" -> mono.take(pixelTag(mono)))
+    rejects.foreach { case (name, bytes) =>
+      withClue(s"$name: ") {
+        val byDecode = intercept[IllegalArgumentException](decodeDicomWithInstance("bad.dcm", bytes))
+        val byHeader = intercept[IllegalArgumentException](dicomHeader("bad.dcm", bytes))
+        byHeader.getMessage shouldBe byDecode.getMessage
+        byHeader.getMessage should include("bad.dcm")
+      }
+    }
+  }
+
   test("JPEG 2000 codec: lossless round trip across geometry, precision, levels, code-block size") {
     import graft.sources.Jpeg2000Codec
     val genCase = for {

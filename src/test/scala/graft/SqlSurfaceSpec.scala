@@ -169,6 +169,111 @@ class SqlSurfaceSpec extends AnyFunSuite with Matchers {
       .exists(t => String.valueOf(t.getMessage).contains("bad.dcm")) shouldBe true
   }
 
+  test("dicomCensus reads headers only: garbage after PixelData changes no row; bad headers still throw") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    import graft.core.PixelCodec
+    val dir = Files.createTempDirectory("graft_census_hdr")
+    val intact = dir.resolve("intact"); val garbled = Files.createDirectory(dir.resolve("garbled"))
+    val stacks = spark.range(2L).map { i =>
+      val slices = (0 until 8).map(k =>
+        Kernels.constantImage(12, 6, 1, i * 100.0 + k * 3.0 + 5.0, PixelCodec.Short16))
+      (s"/census/$i", slices.reduce(Kernels.appendStack))
+    }.toDF("sample", "image")
+    ImageOps.saveDicomSeries(stacks, intact.toString)
+    // every byte after the PixelData tag (little- or big-endian) overwritten
+    val rnd = new scala.util.Random(7)
+    val tags = Seq(Array(0xe0, 0x7f, 0x10, 0x00), Array(0x7f, 0xe0, 0x00, 0x10)).map(_.map(_.toByte))
+    val files = Files.list(intact).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".dcm"))
+    files.length shouldBe 16
+    files.foreach { f =>
+      val bytes = Files.readAllBytes(f)
+      val at = (132 until bytes.length - 4).find(i => tags.exists(bytes.slice(i, i + 4).sameElements(_))).get
+      (at + 4 until bytes.length).foreach(i => bytes(i) = rnd.nextInt(256).toByte)
+      Files.write(garbled.resolve(f.getFileName), bytes)
+    }
+    def census(d: java.nio.file.Path) =
+      ImageOps.dicomCensus(spark, s"$d/*.dcm").orderBy("ts").collect().toSeq
+    val rows = census(intact)
+    rows.length shouldBe 8
+    rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(5), r.getLong(6))).distinct shouldBe
+      Seq((2L, 2L, 24L, 12L))
+    census(garbled) shouldBe rows
+    // a decode of the same files does not survive the garbage
+    intercept[Exception](ImageOps.loadDicomSeries(spark, s"$garbled/*.dcm").collect())
+    def thrownNames(d: java.nio.file.Path, name: String) = {
+      val e = intercept[Exception](census(d))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(name))
+    }
+    val junk = Files.createDirectory(dir.resolve("junk"))
+    Files.copy(files.head, junk.resolve("ok.dcm"))
+    Files.write(junk.resolve("junk.dcm"), Array.fill[Byte](300)(7))
+    thrownNames(junk, "junk.dcm") shouldBe true
+    // the explicit little-endian syntax UID, padded, rewritten to one no decoder speaks
+    val mpeg = Files.createDirectory(dir.resolve("mpeg"))
+    val explicitLe = "1.2.840.10008.1.2.1\u0000".getBytes("US-ASCII")
+    val src = files.map(Files.readAllBytes).find(b => b.indices.exists(i =>
+      b.slice(i, i + explicitLe.length).sameElements(explicitLe))).get
+    val at = src.indices.find(i => src.slice(i, i + explicitLe.length).sameElements(explicitLe)).get
+    "1.2.840.10008.1.2.9\u0000".getBytes("US-ASCII").copyToArray(src, at)
+    Files.write(mpeg.resolve("mpeg.dcm"), src)
+    thrownNames(mpeg, "mpeg.dcm") shouldBe true
+  }
+
+  test("imagedir: a query on a field of `image` reads the whole struct") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_img_field").toString
+    ImageOps.saveImages(ImageQueries.debugImages(spark, count = 3, width = 20, height = 10)
+      .withColumn("image", ImageFunctions.run2Udf(col("image"), lit("8-bit"), lit(""))), dir)
+    ImageOps.loadImages(spark, s"$dir/*.png")
+      .select(col("image.width"), col("image.height"), col("image.slices"))
+      .as[(Int, Int, Int)].collect().toSeq shouldBe Seq.fill(3)((20, 10, 1))
+  }
+
+  test("the Hadoop configuration ships once per session, not once per scan") {
+    import org.apache.spark.broadcast.Broadcast
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.util.SerializableConfiguration
+    import graft.sources.ImageDirReaderFactory
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_conf_ship").toString
+    val out = java.nio.file.Files.createTempDirectory("graft_conf_ship_out").toString
+    ImageOps.saveImages(ImageQueries.debugImages(spark, count = 2)
+      .withColumn("image", ImageFunctions.run2Udf(col("image"), lit("8-bit"), lit(""))), dir)
+    val glob = s"$dir/*.png"
+    // the configuration broadcast the scan's reader factory holds, after running it
+    def shipped(df: DataFrame): Option[Broadcast[SerializableConfiguration]] = {
+      df.collect().length shouldBe 2
+      val factories = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec => b.readerFactory.asInstanceOf[ImageDirReaderFactory]
+      }
+      factories.length shouldBe 1
+      factories.head.conf
+    }
+    // the sink ships no broadcast of its own: one stage, one task binary
+    def broadcastsBy(f: => Unit): Long = {
+      val before = sc.broadcast(0).id
+      f
+      sc.broadcast(0).id - before - 1
+    }
+    val first = shipped(ImageOps.loadImages(spark, glob).select("image")).get
+    val second = shipped(ImageOps.imageFiles(spark, glob).select("content")).get
+    broadcastsBy(ImageOps.saveImages(ImageOps.loadImages(spark, glob), out)) shouldBe 1
+    second.id shouldBe first.id
+    shipped(ImageOps.loadImages(spark, glob).select("image")).get.id shouldBe first.id
+    shipped(ImageOps.imageFiles(spark, glob).select("name")) shouldBe None
+    sc.hadoopConfiguration.set("graft.test.shipMarker", "42")
+    try {
+      val fresh = shipped(ImageOps.loadImages(spark, glob).select("image")).get
+      fresh.id should not be first.id
+      fresh.value.value.get("graft.test.shipMarker") shouldBe "42"
+    } finally sc.hadoopConfiguration.unset("graft.test.shipMarker")
+  }
+
   test("runRange parameter sweep fans out rows (scOps.scala:207-224)") {
     val swept = ImageQueries.debugImages(spark, count = 3)
       .runRange("Median...", ImageOps.linearRange("radius", 1, 3, 3))
